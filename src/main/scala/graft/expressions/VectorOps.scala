@@ -58,12 +58,16 @@ object VectorKernel {
     * replacement for the interpreted `aggregate(zip_with(a, b,
     * _.toLong * _), 0L, _ + _)` fold in the int8 kNN sweep. Exact 64-bit
     * integer arithmetic (|dot| ≤ dim·127² for int8 inputs), so the value
-    * is identical to the composed fold under ANY summation order. */
-  def intDot(a: ArrayData, b: ArrayData): Long = {
+    * is identical to the composed fold under ANY summation order. Null,
+    * as the fold gives, when the lengths differ (zip_with pads with
+    * nulls) or any element is null. */
+  def intDot(a: ArrayData, b: ArrayData): java.lang.Long = {
     val n = a.numElements()
+    if (b.numElements() != n) return null
     var acc = 0L
     var i = 0
     while (i < n) {
+      if (a.isNullAt(i) || b.isNullAt(i)) return null
       acc += a.getInt(i).toLong * b.getInt(i)
       i += 1
     }
@@ -182,6 +186,7 @@ case class IntDot(left: Expression, right: Expression)
   override def nullIntolerant: Boolean = true
 
   override def dataType: DataType = LongType
+  override def nullable: Boolean = true // ragged or null-element inputs
   override def prettyName: String = "graft_int_dot"
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
@@ -197,9 +202,12 @@ case class IntDot(left: Expression, right: Expression)
   override def nullSafeEval(a: Any, b: Any): Any =
     VectorKernel.intDot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val dot = ctx.freshName("dot")
     nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.expressions.VectorKernel.intDot($a, $b);")
+      s"""java.lang.Long $dot = graft.expressions.VectorKernel.intDot($a, $b);
+         |if ($dot == null) { ${ev.isNull} = true; } else { ${ev.value} = $dot; }""".stripMargin)
+  }
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): IntDot =

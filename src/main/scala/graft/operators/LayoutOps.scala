@@ -31,19 +31,15 @@ object LayoutOps {
     * Pure shift/and arithmetic (the per-bit terms occupy disjoint bit
     * positions, so plain `+` assembles the key — no engine-specific
     * bitwise-OR needed and the oracle is a literal SQL sum). bits ≤ 31
-    * keeps the key inside a non-negative BIGINT. Values are masked to
-    * `bits` bits UP FRONT (caller buckets/clamps upstream — at 100 TB the
-    * inputs are already coarse quantiles or hash buckets, not raw
-    * values): without the mask, a NEGATIVE input (e.g. a caller's `%`
-    * remainder, which keeps the dividend's sign) would leak sign bits
-    * through the arithmetic shiftright and corrupt the interleave; the
-    * mask normalizes it to its two's-complement low bits instead.
-    * In-range non-negative values are untouched. */
+    * keeps the key inside a non-negative BIGINT. Only bits 0..bits-1 of
+    * each input are read, so a negative input contributes its
+    * two's-complement low bits (caller buckets/clamps upstream — at
+    * 100 TB the inputs are already coarse quantiles or hash buckets, not
+    * raw values). */
   def zorderKey(a: Column, b: Column, bits: Int): Column = {
     require(bits >= 1 && bits <= 31, "bits must be in [1, 31]")
-    val mask = lit((1L << bits) - 1L)
-    val av = a.cast("long").bitwiseAND(mask)
-    val bv = b.cast("long").bitwiseAND(mask)
+    val av = a.cast("long")
+    val bv = b.cast("long")
     val terms = (0 until bits).flatMap { i =>
       Seq(shiftleft(shiftright(av, i).bitwiseAND(lit(1L)), 2 * i),
           shiftleft(shiftright(bv, i).bitwiseAND(lit(1L)), 2 * i + 1))

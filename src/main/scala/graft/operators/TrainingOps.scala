@@ -30,9 +30,6 @@ object TrainingOps {
       .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("dup_count"))
       .select(col("keep_id"), col("dup_count"))
 
-  private def tokensCol(text: Column): Column =
-    split(lower(text), "\\s+")
-
   /** k-shingles (word n-grams) as an array column — via the native
     * codegen kernel (one JVM loop per row; byte-identical to the previous
     * composed-builtin `when(size < k, [concat_ws(toks)]).otherwise(

@@ -256,16 +256,6 @@ object Layout {
     textBoxes
   }
 
-  /** pages_extractor.cc:392-400 — union-area minus areas (PDFMiner dist). */
-  private def getDist(o1: TextChunk, o2: TextChunk): Float = {
-    val x0 = math.min(o1.coordinates.x0, o2.coordinates.x0)
-    val y0 = math.min(o1.coordinates.y0, o2.coordinates.y0)
-    val x1 = math.max(o1.coordinates.x1, o2.coordinates.x1)
-    val y1 = math.max(o1.coordinates.y1, o2.coordinates.y1)
-    (x1 - x0) * (y1 - y0) -
-      widthC(o1.coordinates) * height(o1.coordinates) - widthC(o2.coordinates) * height(o2.coordinates)
-  }
-
   /** pages_extractor.cc:97-111 */
   private def isBetween(groups: ArrayBuffer[TextChunk], obj1: Int, obj2: Int): Boolean = {
     val c1 = groups(obj1).coordinates
@@ -315,7 +305,7 @@ object Layout {
     * compacts in order, new pairs append at the end). The (c, d) sort key
     * is packed into ONE long — c in bit 32, the float's order-preserving
     * bit image in the low 32 — so minIndex is a single long compare per
-    * element. getDist never produces -0.0 (a-a = +0.0 in IEEE), so the
+    * element. BoxCache.dist never produces -0.0 (a-a = +0.0 in IEEE), so the
     * bit image ordering equals float ordering; ties keep first-index
     * min_element semantics because equal (c, d) give equal keys. */
   private final class DistList(capacity: Int) {
@@ -390,12 +380,10 @@ object Layout {
   private val tlDists = ThreadLocal.withInitial[DistList](() => new DistList(4096))
 
   /** Flat per-box mirror of (coords, area, isEmpty) for the O(n²) distance
-    * loops: getDist on TextChunk→Coords objects is two dependent pointer
-    * loads per operand per pair; on parallel primitive arrays it's
-    * sequential float loads, and the per-box area (invariant between
-    * merges) is computed once per box instead of once per pair. Values are
-    * bit-identical to the object path — same expressions over the same
-    * floats — merged groups are re-`load`ed after each createGroup. */
+    * loops: parallel primitive arrays give sequential float loads per
+    * pair, and the per-box area (invariant between merges) is computed
+    * once per box instead of once per pair. Merged groups are re-`load`ed
+    * after each createGroup. */
   private final class BoxCache {
     var x0 = new Array[Float](512); var y0 = new Array[Float](512)
     var x1 = new Array[Float](512); var y1 = new Array[Float](512)

@@ -1,7 +1,6 @@
 package graft.testkit
 
 import graft.Model._
-import graft.pdf.Lex
 import org.apache.spark.sql.SparkSession
 
 /** Deterministic interleaved-document corpus (seed=42 discipline): docs with

@@ -1,7 +1,8 @@
 package graft
 
+import scala.util.control.NonFatal
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession, SaveMode}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Typed rows of the extraction pipeline (FIXTURES.md §1 / BASELINE input_hint). */
@@ -10,6 +11,22 @@ object Model {
   case class InSpan(kind: String, text: String, media_ref: String, offset: Int)
   case class DocRow(doc_id: String, spans: Seq[InSpan])
   case class MediaRow(media_ref: String, bytes: Array[Byte], size_bucket: Int)
+
+  object MediaRow {
+    /** A media row whose `size_bucket` is filled from its payload. */
+    def apply(media_ref: String, bytes: Array[Byte]): MediaRow =
+      MediaRow(media_ref, bytes, sizeBucket(bytes.length))
+
+    /** The size bucket of an `n`-byte payload: ceil(log2 n), at least 1, so
+      * a blob of exactly 2^k bytes lands in bucket k. The heavy/small
+      * routers (`ExtractJob.extractMedia`, `MediaOps.featurize`) filter on
+      * this column. */
+    def sizeBucket(n: Int): Int = 32 - Integer.numberOfLeadingZeros(math.max(1, n - 1))
+
+    /** [[sizeBucket]] as a column over a byte-length column, for media
+      * written without the column: the bit length of max(n - 1, 1). */
+    def sizeBucket(n: Column): Column = length(bin(greatest(n - 1, lit(1))))
+  }
 
   /** Output span: kind ∈ {text, pdf_text, error}; order 0-based contiguous. */
   case class OutSpan(doc_id: String, order: Int, kind: String, text: String, media_ref: String)
@@ -50,24 +67,34 @@ object ExtractJob {
     * kernel (whose recovery path also owns damaged/garbage payloads, so
     * non-PDF junk keeps its established error contract). Returns
     * (kind, text). */
-  def extract1(bytes: Array[Byte]): (String, String) =
-    if (graft.html.Html.looksHtml(bytes)) ("html", graft.html.Html.html2txt(bytes))
-    else ("pdf", graft.pdf.Pdf.pdf2txt(bytes))
+  def extract1(bytes: Array[Byte]): (String, String) = {
+    val kind = sniff(bytes)
+    (kind, kernel(kind, bytes))
+  }
 
-  /** The extraction kernel as a per-partition typed pass. */
+  private def sniff(bytes: Array[Byte]): String =
+    if (graft.html.Html.looksHtml(bytes)) "html" else "pdf"
+
+  private def kernel(kind: String, bytes: Array[Byte]): String =
+    if (kind == "html") graft.html.Html.html2txt(bytes) else graft.pdf.Pdf.pdf2txt(bytes)
+
+  /** The extraction kernel as a per-partition typed pass. The per-blob
+    * error contract: a non-fatal kernel failure becomes a failed row of
+    * the sniffed kind carrying the message; fatal errors (OOM, linkage,
+    * interrupts) propagate and fail the task. */
   private def runKernel(work: Dataset[(String, Array[Byte])]): Dataset[Extracted] = {
     import work.sparkSession.implicits._
     work.mapPartitions { it =>
       val pid = TaskContext.getPartitionId()
       it.map { case (ref, bytes) =>
         val t0 = System.nanoTime()
-        try {
-          val (kind, text) = extract1(bytes)
-          Extracted(ref, kind, ok = true, text, "", bytes.length.toLong, (System.nanoTime() - t0) / 1000, pid)
-        } catch {
-          case e: Throwable =>
-            val msg = Option(e.getMessage).getOrElse(e.getClass.getSimpleName)
-            Extracted(ref, "pdf", ok = false, "", msg.take(200), bytes.length.toLong, (System.nanoTime() - t0) / 1000, pid)
+        val kind = sniff(bytes)
+        def row(ok: Boolean, text: String, error: String) =
+          Extracted(ref, kind, ok, text, error, bytes.length.toLong, (System.nanoTime() - t0) / 1000, pid)
+        try row(ok = true, kernel(kind, bytes), "")
+        catch {
+          case NonFatal(e) =>
+            row(ok = false, "", Option(e.getMessage).getOrElse(e.getClass.getSimpleName).take(200))
         }
       }
     }
@@ -105,8 +132,21 @@ object ExtractJob {
     runKernel(small).union(runKernel(heavy))
   }
 
+  /** The pipeline's one composition: docs ⋈ media → kernel → ordered
+    * spans (`assembleSpans`' output; no lineage, no commit). */
+  def extract(docs: DataFrame, media: DataFrame, numPartitions: Int)
+             (implicit spark: SparkSession): DataFrame =
+    assembleSpans(docs, extractMedia(media, mediaRefs(docs), numPartitions).toDF())
+
+  /** The distinct refs of the spans that need media: every non-text span,
+    * the same rule `assembleSpans` joins on. */
+  private def mediaRefs(docs: DataFrame): DataFrame =
+    docs.select(explode(col("spans")).as("span"))
+      .where(col("span.kind") =!= "text")
+      .select(col("span.media_ref").as("media_ref")).distinct()
+
   /** Assemble the ordered span output. `extracted` rows are keyed by
-    * media_ref. Only pdf spans join on media_ref — text spans carry
+    * media_ref. Only media spans join on media_ref — text spans carry
     * media_ref="" and would all land on ONE key; at scale that single hot
     * key breaks a sort-merge fallback, so they bypass the join entirely
     * and union back in. */
@@ -114,7 +154,7 @@ object ExtractJob {
     val exploded = docs.select(col("doc_id"), posexplode(col("spans")).as(Seq("order", "span")))
       .select(col("doc_id"), col("order"),
         col("span.kind").as("in_kind"), col("span.text").as("in_text"), col("span.media_ref").as("media_ref"))
-    val pdfSpans = exploded.where(col("in_kind") =!= "text")
+    val mediaSpans = exploded.where(col("in_kind") =!= "text")
       .join(extracted.select(col("media_ref"), col("ok"), col("kind").as("x_kind"),
         col("text").as("x_text")), Seq("media_ref"), "left")
       .select(
@@ -125,7 +165,7 @@ object ExtractJob {
     val textSpans = exploded.where(col("in_kind") === "text")
       .select(col("doc_id"), col("order"), lit("text").as("kind"),
         col("in_text").as("text"), lit("").as("media_ref"))
-    pdfSpans.unionByName(textSpans)
+    mediaSpans.unionByName(textSpans)
   }
 
   /** Committed snapshot history, oldest first: the manifest the atomic
@@ -181,11 +221,7 @@ object ExtractJob {
       docs0.join(done, Seq("doc_id"), "left_anti")
     } else docs0
 
-    val exploded = docs.select(col("doc_id"), explode(col("spans")).as("span"))
-    val neededRefs = exploded.filter(col("span.kind") =!= "text")
-      .select(col("span.media_ref").as("media_ref")).distinct()
-
-    val extracted = extractMedia(media, neededRefs, parts)
+    val extracted = extractMedia(media, mediaRefs(docs), parts)
     // reused by the spans join + lineage/metrics aggregation; DISK_ONLY —
     // the extracted text of a whole input split must not pin executor heap
     extracted.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)

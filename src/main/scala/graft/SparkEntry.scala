@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.queries.QueryDef
 import graft.testkit.Corpus
 
@@ -19,10 +18,7 @@ object SparkEntry {
     val built = Corpus.build(nDocs = 16, heavyEvery = 8)
     val docs = s.createDataset(built.docs).toDF()
     val media = s.createDataset(built.media).toDF()
-    val refs = docs.select(explode(col("spans.media_ref")).as("media_ref"))
-      .where(col("media_ref") =!= "").distinct()
-    ExtractJob.assembleSpans(docs,
-      ExtractJob.extractMedia(media, refs, 8).toDF())
+    ExtractJob.extract(docs, media, 8)
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = QueryDef.all.map(q => q.name -> q.build).toMap

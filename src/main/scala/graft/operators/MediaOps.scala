@@ -268,8 +268,7 @@ object MediaOps {
     val parts = if (numPartitions > 0) numPartitions else spark.sessionState.conf.numShufflePartitions
     val withBucket =
       if (media.columns.contains("size_bucket")) media
-      else media.withColumn("size_bucket",
-        ceil(log2(greatest(octet_length(col("bytes")).cast("long"), lit(2L)))).cast("int"))
+      else media.withColumn("size_bucket", graft.Model.MediaRow.sizeBucket(octet_length(col("bytes"))))
     val work = withBucket.select(col("media_ref"), col("kind"), col("bytes"), col("size_bucket"))
     def run(df: DataFrame): Dataset[T] =
       df.select(col("media_ref"), col("kind"), col("bytes")).as[MediaMeta]

@@ -765,7 +765,6 @@ object TrainingOps {
     var labels = edges.select(col("a").as("id")).distinct()
       .withColumn("label", col("id"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val retired = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var converged = false
     var iter = 0
     while (!converged && iter < maxIter) {
@@ -797,13 +796,15 @@ object TrainingOps {
       // convergence question from the in-plan flag
       val changed = next.agg(coalesce(sum(when(col("chg"), 1L).otherwise(0L)), lit(0L)))
         .head().getLong(0)
-      retired += labels; retired += hop
+      // next is materialized and its plan truncated, so nothing reads this
+      // round's labels and hop again: free their blocks before the next round
+      labels.unpersist(blocking = false)
+      hop.unpersist(blocking = false)
       labels = next.drop("chg")
       converged = changed == 0
       iter += 1
     }
     edges.unpersist(blocking = false)
-    retired.foreach(_.unpersist(blocking = false))
     // with pointer doubling, rounds ≈ log2(component diameter); hitting the
     // cap still means some immense duplicate chain is split into multiple
     // cluster ids — silently returning those would LOOK valid, so warn

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.Model.MediaRow.sizeBucket
 import graft.sources.Warc
 
 /** Spark surface for WARC crawl-archive ingestion: expand container files
@@ -51,19 +52,13 @@ object WarcOps {
     (docs, media)
   }
 
-  /** Same log2 size bucketing as the native corpus (pushable column the
-    * heavy/small kernel split filters on). */
-  private def sizeBucket(n: Int): Int =
-    32 - Integer.numberOfLeadingZeros(math.max(1, n - 1))
-
   /** End-to-end: WARC files → extracted span table (doc_id, ord, kind,
-    * text, media_ref), the same output contract as `ExtractJob`. */
+    * text, media_ref) through `ExtractJob.extract`. The contract is
+    * `ExtractJob`'s span output with `order` renamed to `ord`. */
   def extractWarc(warcs: DataFrame, numPartitions: Int)
                  (implicit spark: SparkSession): DataFrame = {
     val (docs, media) = explode(warcs)
-    val refs = docs.select(explode_outer(col("spans.media_ref")).as("media_ref")).distinct()
-    graft.ExtractJob.assembleSpans(docs,
-        graft.ExtractJob.extractMedia(media, refs, numPartitions).toDF())
+    graft.ExtractJob.extract(docs, media, numPartitions)
       .select(col("doc_id"), col("order").as("ord"), col("kind"),
         col("text"), col("media_ref"))
   }

@@ -22,7 +22,7 @@ object Pdf {
     new PagesExtractor(getIdGen(pagesPair.raw)._1, storage, decryptData, buffer)
   }
 
-  private def openDocument(buffer: String): (PagesExtractor, ObjectStorage) = {
+  private def openDocument(buffer: String): PagesExtractor = {
     val crossRefOffset0 = XRef.getCrossRefOffset(buffer)
     val (trailerOffsets, damaged, crossRefOffset) = XRef.getTrailerOffsets(buffer, crossRefOffset0)
     val id2offsets =
@@ -30,20 +30,14 @@ object Pdf {
       else XRef.getId2Offsets(buffer, trailerOffsets)
     val encryptData = XRef.getEncryptData(buffer, trailerOffsets(0)._1, trailerOffsets(0)._2, id2offsets)
     val storage = new ObjectStorage(buffer, id2offsets, encryptData)
-    (getText(buffer, crossRefOffset, storage, encryptData), storage)
+    getText(buffer, crossRefOffset, storage, encryptData)
   }
 
   /** parser.cc:451-462 — whole-PDF → extracted UTF-8 text. */
-  def pdf2txt(bytes: Array[Byte]): String = {
-    val buffer = fromBytes(bytes)
-    val (extractor, _) = openDocument(buffer)
-    toUtf8(extractor.getText())
-  }
+  def pdf2txt(bytes: Array[Byte]): String =
+    toUtf8(openDocument(fromBytes(bytes)).getText())
 
   /** Per-page extracted text (page-major order), UTF-8. */
-  def pdf2pages(bytes: Array[Byte]): Seq[String] = {
-    val buffer = fromBytes(bytes)
-    val (extractor, _) = openDocument(buffer)
-    extractor.getPageTexts().map(toUtf8)
-  }
+  def pdf2pages(bytes: Array[Byte]): Seq[String] =
+    openDocument(fromBytes(bytes)).getPageTexts().map(toUtf8)
 }

@@ -4,7 +4,7 @@ package queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.MediaOps
-import graft.testkit.{PdfBuilder, HtmlBuilder, WarcBuilder}
+import graft.testkit.{Corpus, PdfBuilder, HtmlBuilder, WarcBuilder}
 import QuerySupport._
 
 /** Extraction queries: the kernel over one-doc-per-fixture corpora (one
@@ -50,15 +50,8 @@ object Extraction extends QueryFamily("extraction") {
   /** Run the extraction pipeline over a one-doc-per-fixture corpus. */
   private def extractionDF(spark: SparkSession, fixtures: Seq[PdfBuilder.Fixture]): DataFrame = {
     implicit val s: SparkSession = spark
-    import s.implicits._
-    val docs = s.createDataset(fixtures.map(f =>
-      Model.DocRow(f.name, Seq(Model.InSpan(inKind(f), "", f.name, 0))))).toDF()
-    val media = s.createDataset(fixtures.map(f =>
-      Model.MediaRow(f.name, f.bytes, sizeBucket(f.bytes.length)))).toDF()
-    val refs = docs.select(explode(col("spans.media_ref")).as("media_ref")).distinct()
-    val extracted = ExtractJob.extractMedia(media, refs, s.sessionState.conf.numShufflePartitions)
-    ExtractJob.assembleSpans(docs, extracted.toDF())
-      .select(col("doc_id"), col("order").as("ord"), col("kind"), col("text"), col("media_ref"))
+    val (docs, media) = Corpus.perFixture(fixtures)
+    spanRows(ExtractJob.extract(docs, media, s.sessionState.conf.numShufflePartitions))
   }
 
   private val udfFixtures = Seq("f01_minimal_flate", "f13_tj_kerning")
@@ -111,22 +104,15 @@ object Extraction extends QueryFamily("extraction") {
     // table the moment run1 committed; AS OF run2 the full table
     query("x_time_travel", build = (s, _) => {
         implicit val sp: SparkSession = s
-        import sp.implicits._
-        val fs2 = fx(resumeFixtures: _*)
-        val fs1 = fs2.dropRight(1)
-        def docsDf(fs: Seq[PdfBuilder.Fixture]) = sp.createDataset(fs.map(f =>
-          Model.DocRow(f.name, Seq(Model.InSpan("pdf", "", f.name, 0))))).toDF()
-        val media = sp.createDataset(fs2.map(f =>
-          Model.MediaRow(f.name, f.bytes, sizeBucket(f.bytes.length)))).toDF()
+        val (docs1, _) = Corpus.perFixture(fx(resumeFixtures.dropRight(1): _*))
+        val (docs2, media) = Corpus.perFixture(fx(resumeFixtures: _*))
         val tmp = scratchDir("graft-travel")
         // fixture-scale runs: 4 partitions (the heavy-branch salt spread
         // and lineage agg width; outputs are partition-count invariant —
         // production runs size this to the cluster via numPartitions)
-        ExtractJob.run(docsDf(fs1), media, tmp, "run1", numPartitions = 4)
-        ExtractJob.run(docsDf(fs2), media, tmp, "run2", numPartitions = 4)
-        def view(r: String) = ExtractJob.readAsOf(tmp, r)
-          .select(lit(r).as("as_of"), col("doc_id"), col("order").as("ord"),
-            col("kind"), col("text"), col("media_ref"))
+        ExtractJob.run(docs1, media, tmp, "run1", numPartitions = 4)
+        ExtractJob.run(docs2, media, tmp, "run2", numPartitions = 4)
+        def view(r: String) = spanRows(ExtractJob.readAsOf(tmp, r)).select(lit(r).as("as_of"), col("*"))
         view("run1").unionByName(view("run2"))
       },
       // Oracle for x_time_travel, derived from the fixture expectations:
@@ -146,19 +132,12 @@ object Extraction extends QueryFamily("extraction") {
     // work instead of recomputing it).
     query("x_resume", build = (s, _) => {
         implicit val sp: SparkSession = s
-        import sp.implicits._
-        val fs2 = fx(resumeFixtures: _*)
-        val fs1 = fs2.dropRight(1)
-        def docsDf(fs: Seq[PdfBuilder.Fixture]) = sp.createDataset(fs.map(f =>
-          Model.DocRow(f.name, Seq(Model.InSpan("pdf", "", f.name, 0))))).toDF()
-        val media = sp.createDataset(fs2.map(f =>
-          Model.MediaRow(f.name, f.bytes, sizeBucket(f.bytes.length)))).toDF()
+        val (docs1, _) = Corpus.perFixture(fx(resumeFixtures.dropRight(1): _*))
+        val (docs2, media) = Corpus.perFixture(fx(resumeFixtures: _*))
         val tmp = scratchDir("graft-resume")
         // fixture-scale runs: 4 partitions (see x_time_travel note)
-        ExtractJob.run(docsDf(fs1), media, tmp, "run1", numPartitions = 4)
-        val committed = ExtractJob.run(docsDf(fs2), media, tmp, "run2", numPartitions = 4)
-        val spans = committed.select(col("doc_id"), col("order").as("ord"),
-          col("kind"), col("text"), col("media_ref"))
+        ExtractJob.run(docs1, media, tmp, "run1", numPartitions = 4)
+        val spans = spanRows(ExtractJob.run(docs2, media, tmp, "run2", numPartitions = 4))
         val metrics = sp.read.parquet(s"$tmp/metrics/run=run1", s"$tmp/metrics/run=run2")
           .select(concat(lit("_metrics_"), col("run_id")).as("doc_id"),
             col("media_total").cast("int").as("ord"), lit("metrics").as("kind"),
@@ -189,12 +168,8 @@ object Extraction extends QueryFamily("extraction") {
           Model.InSpan("html", "", h01.name, 2),
           Model.InSpan("pdf", "", g.name, 3),
           Model.InSpan("text", "outro", "", 4))))).toDF()
-        val media = sp.createDataset(Seq(f01, h01, g).map(f =>
-          Model.MediaRow(f.name, f.bytes, sizeBucket(f.bytes.length)))).toDF()
-        val refs = docs.select(explode(col("spans.media_ref")).as("media_ref"))
-          .where(col("media_ref") =!= "").distinct()
-        ExtractJob.assembleSpans(docs, ExtractJob.extractMedia(media, refs, 4).toDF())
-          .select(col("doc_id"), col("order").as("ord"), col("kind"), col("text"), col("media_ref"))
+        val media = sp.createDataset(Seq(f01, h01, g).map(f => Model.MediaRow(f.name, f.bytes))).toDF()
+        spanRows(ExtractJob.extract(docs, media, 4))
       },
       // By-construction oracle for the mixed interleaved document.
       oracle = {

@@ -2,8 +2,9 @@ package graft
 package queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import scala.util.control.NonFatal
-import graft.testkit.{PdfBuilder, WarcBuilder}
+import graft.testkit.{Corpus, PdfBuilder, WarcBuilder}
 
 /** Helpers shared by several query families. */
 private[queries] object QuerySupport {
@@ -47,13 +48,14 @@ private[queries] object QuerySupport {
     names.map(all)
   }
 
-  /** Input-span kind / expected output-span kind per fixture family. */
-  def inKind(f: PdfBuilder.Fixture): String =
-    if (f.name.startsWith("h")) "html" else "pdf"
+  /** Expected output-span kind per fixture family. */
   def outKind(f: PdfBuilder.Fixture): String =
-    if (f.name == "f16_garbage") "error" else inKind(f) + "_text"
+    if (f.name == "f16_garbage") "error" else Corpus.spanKind(f) + "_text"
 
-  def sizeBucket(n: Int): Int = 32 - Integer.numberOfLeadingZeros(math.max(1, n - 1))
+  /** An extraction span table as the extraction queries return it:
+    * (doc_id, ord, kind, text, media_ref), `order` renamed to `ord`. */
+  def spanRows(spans: DataFrame): DataFrame =
+    spans.select(col("doc_id"), col("order").as("ord"), col("kind"), col("text"), col("media_ref"))
 
   def sqlStr(s: String): String = "'" + s.replace("'", "''") + "'"
 

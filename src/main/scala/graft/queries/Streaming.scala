@@ -302,18 +302,11 @@ object Streaming extends QueryFamily("streaming") {
     // Structured-Streaming surface: file-source micro-batches through the
     // same operators, AvailableNow trigger, checkpointed sink
     query("x_stream_extract", build = (s, _) => fixtureStream(s, "graft-stream") { tmp =>
-        implicit val sp: SparkSession = s
-        import sp.implicits._
-        val fs = fx(streamFixtures: _*)
-        val docs = sp.createDataset(fs.map(f =>
-          Model.DocRow(f.name, Seq(Model.InSpan("pdf", "", f.name, 0))))).toDF()
+        val (docs, media) = graft.testkit.Corpus.perFixture(fx(streamFixtures: _*))(s)
         docs.coalesce(1).write.parquet(s"$tmp/docs")
-        val media = sp.createDataset(fs.map(f =>
-          Model.MediaRow(f.name, f.bytes, sizeBucket(f.bytes.length)))).toDF()
-        graft.streaming.StreamingExtract.start(sp, s"$tmp/docs", media, s"$tmp/out", docs.schema)
+        graft.streaming.StreamingExtract.start(s, s"$tmp/docs", media, s"$tmp/out", docs.schema)
           .awaitTermination()
-        sp.read.parquet(s"$tmp/out/spans_out")
-          .select(col("doc_id"), col("order").as("ord"), col("kind"), col("text"), col("media_ref"))
+        spanRows(s.read.parquet(s"$tmp/out/spans_out"))
       },
       oracle = extractionOracle(fx(streamFixtures: _*))),
     // continuous crawl-archive ingestion: two waves of WARC files through

@@ -1,7 +1,7 @@
 package graft.testkit
 
 import graft.Model._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Deterministic interleaved-document corpus (seed=42 discipline): docs with
   * mixed text+pdf spans over a media dimension with a heavy size tail. The
@@ -52,7 +52,7 @@ object Corpus {
         // 3 KB): 10-30 pages typical, 96-page monsters on the skew tail
         val pages = if (heavy) 96 else 10 + rnd.nextInt(21)
         val (bytes, _) = textPdf(f"m$id", pages, linesPerPage = 30)
-        MediaRow(f"m$id%08d", bytes, 32 - Integer.numberOfLeadingZeros(math.max(1, bytes.length - 1)))
+        MediaRow(f"m$id%08d", bytes)
       }
     }
     media.toDF().write.mode("overwrite").parquet(s"$outDir/media")
@@ -68,7 +68,18 @@ object Corpus {
     (nDocs.toLong, nMedia)
   }
 
-  private def sizeBucket(n: Int): Int = 32 - Integer.numberOfLeadingZeros(math.max(1, n - 1))
+  /** Input-span kind of a fixture: "html" for `HtmlBuilder`'s, else "pdf". */
+  def spanKind(f: PdfBuilder.Fixture): String =
+    if (f.name.startsWith("h")) "html" else "pdf"
+
+  /** One document per fixture, each a single media span over that
+    * fixture's bytes (doc_id = media_ref = fixture name): the (docs, media)
+    * frames of the one-span-per-fixture corpora. */
+  def perFixture(fixtures: Seq[PdfBuilder.Fixture])(implicit spark: SparkSession): (DataFrame, DataFrame) = {
+    import spark.implicits._
+    (fixtures.map(f => DocRow(f.name, Seq(InSpan(spanKind(f), "", f.name, 0)))).toDF(),
+      fixtures.map(f => MediaRow(f.name, f.bytes)).toDF())
+  }
 
   /** `nDocs` interleaved documents; ~1/heavyEvery media are 50-page monsters
     * (skew exercise); fixture PDFs (incl. the garbage one) are mixed in. */
@@ -108,7 +119,7 @@ object Corpus {
               (f.bytes, f.expected, true)
             }
           spans += InSpan("pdf", "", ref, j)
-          media += MediaRow(ref, bytes, sizeBucket(bytes.length))
+          media += MediaRow(ref, bytes)
           outs += ((if (ok) "pdf_text" else "error", if (ok) exp else "", ref))
         }
       }

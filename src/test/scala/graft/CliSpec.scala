@@ -48,14 +48,10 @@ class CliSpec extends AnyFunSuite {
     try {
       import spark.implicits._
       val base = java.nio.file.Files.createTempDirectory("cli-spark").toString
-      val fs = Seq(PdfBuilder.f01MinimalFlate, PdfBuilder.f03Filters)
-      def bucket(n: Int) = 32 - Integer.numberOfLeadingZeros(math.max(1, n - 1))
-      spark.createDataset(fs.map(f =>
-        Model.DocRow(f.name, Seq(Model.InSpan("pdf", "", f.name, 0))))).toDF()
-        .write.parquet(s"$base/docs")
-      spark.createDataset(fs.map(f =>
-        Model.MediaRow(f.name, f.bytes, bucket(f.bytes.length)))).toDF()
-        .write.parquet(s"$base/media")
+      val (docs, media) = graft.testkit.Corpus.perFixture(
+        Seq(PdfBuilder.f01MinimalFlate, PdfBuilder.f03Filters))(spark)
+      docs.write.parquet(s"$base/docs")
+      media.write.parquet(s"$base/media")
       val out = withCapturedOut(
         Cli.main(Array("extract", s"$base/docs", s"$base/media", s"$base/out", "r1")))
       assert(out.trim == "committed run=r1 total_spans=2", s"got [$out]")

@@ -163,4 +163,28 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got(0).kind == "error" && got(0).media_ref == "bad")
     assert(got(1).kind == "text" && got(1).text == "ok")
   }
+
+  test("size_bucket: a 4 MiB blob routes small, one byte more routes heavy; every row owner uses MediaRow") {
+    implicit val s: SparkSession = spark
+    import s.implicits._
+    import Model.MediaRow.sizeBucket
+    // extractMedia's default heavyBucket is 22: buckets above it shuffle
+    assert(sizeBucket(4 << 20) == 22)
+    assert(sizeBucket((4 << 20) + 1) == 23)
+    assert(Seq(0, 1, 2, 3, 4, 5).map(sizeBucket(_)) == Seq(1, 1, 1, 2, 2, 3))
+    // the column form (media written without size_bucket) agrees exactly,
+    // also at powers of two where a floating-point log2 rounds up
+    val ns = Seq(0, 1, 2, 3, 4, 5, 4 << 20, (4 << 20) + 1, 1 << 29, (1 << 29) + 1, Int.MaxValue)
+    val viaCol = ns.toDF("n").select(sizeBucket(org.apache.spark.sql.functions.col("n")))
+      .as[Int].collect().toSeq
+    assert(viaCol == ns.map(sizeBucket(_)))
+    // Corpus.build and WarcOps.explode fill the bucket from the payload
+    Corpus.build(nDocs = 8, heavyEvery = 4).media.foreach(m =>
+      assert(m.size_bucket == sizeBucket(m.bytes.length), m.media_ref))
+    val warcs = Seq(("w1", testkit.WarcBuilder.plain), ("bad", testkit.WarcBuilder.malformed))
+      .toDF("warc_ref", "bytes")
+    val warcMedia = operators.WarcOps.explode(warcs)._2.as[Model.MediaRow].collect()
+    assert(warcMedia.nonEmpty)
+    warcMedia.foreach(m => assert(m.size_bucket == sizeBucket(m.bytes.length), m.media_ref))
+  }
 }

@@ -236,8 +236,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     val built = graft.testkit.Corpus.build(nDocs = 4)
     val docs = s.createDataset(built.docs).toDF()
     val media = s.createDataset(built.media).toDF()
-    val refs = docs.select(explode(col("spans.media_ref")).as("media_ref")).distinct()
-    val spans = ExtractJob.assembleSpans(docs, ExtractJob.extractMedia(media, refs, 4).toDF())
+    val spans = ExtractJob.extract(docs, media, 4)
     val p = spans.queryExecution.executedPlan.toString
     assert(p.contains("MapPartitions"), p) // kernel runs as a single narrow stage
   }

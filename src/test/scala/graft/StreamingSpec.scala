@@ -298,20 +298,12 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("streaming extraction over the FULL fixture corpus equals the batch pipeline row-for-row") {
-    val s = spark
+    implicit val s: SparkSession = spark
     import s.implicits._
-    import org.apache.spark.sql.functions._
     val fixtures = (testkit.PdfBuilder.all :+ testkit.PdfBuilder.f16Garbage) ++ testkit.HtmlBuilder.all
-    def sizeBucket(n: Int): Int = 32 - Integer.numberOfLeadingZeros(math.max(1, n - 1))
-    def kind(f: testkit.PdfBuilder.Fixture) = if (f.name.startsWith("h")) "html" else "pdf"
-    val docs = s.createDataset(fixtures.map(f =>
-      Model.DocRow(f.name, Seq(Model.InSpan(kind(f), "", f.name, 0))))).toDF()
-    val media = s.createDataset(fixtures.map(f =>
-      Model.MediaRow(f.name, f.bytes, sizeBucket(f.bytes.length)))).toDF()
+    val (docs, media) = testkit.Corpus.perFixture(fixtures)
     // batch pipeline
-    implicit val sp: SparkSession = s
-    val refs = docs.select(explode(col("spans.media_ref")).as("media_ref")).distinct()
-    val batchRows = ExtractJob.assembleSpans(docs, ExtractJob.extractMedia(media, refs, 4).toDF())
+    val batchRows = ExtractJob.extract(docs, media, 4)
       .select("doc_id", "order", "kind", "text", "media_ref")
       .as[(String, Int, String, String, String)].collect().sorted.toSeq
     // streaming pipeline over the same corpus

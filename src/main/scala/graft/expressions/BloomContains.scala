@@ -1,8 +1,6 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{BinaryType, BooleanType, DataType, LongType}
 
@@ -60,8 +58,6 @@ case class BloomContains(left: Expression, right: Expression)
 }
 
 object BloomContains {
-  val name = "graft_bloom_contains"
-
   /** splitmix64 finalizer — the second hash of the double-hashing scheme.
     * Public (and static from codegen's perspective) so interpreted eval,
     * generated code and the builder share one definition. */
@@ -118,15 +114,4 @@ object BloomContains {
     }
     true
   }
-
-  private val info = new ExpressionInfo(classOf[BloomContains].getName, name)
-  private val builder: Seq[Expression] => Expression = { exprs =>
-    require(exprs.length == 2, s"$name takes exactly 2 arguments")
-    BloomContains(exprs.head, exprs(1))
-  }
-
-  /** Idempotent per-session registration. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .registerFunction(FunctionIdentifier(name), info, builder)
 }

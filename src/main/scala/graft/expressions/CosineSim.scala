@@ -1,8 +1,6 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
@@ -16,13 +14,17 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * IEEE parity: each accumulator sees exactly the element-order sequence
   * of the equivalent left-fold, so results are bitwise identical to the
   * composed-builtin formulation (and to the DuckDB oracles that replicate
-  * that fold). */
+  * that fold). Null, as the fold gives, when the lengths differ (zip_with
+  * pads with nulls) or any element is null. A zero-norm side gives NaN
+  * (IEEE 0/0), where the composed `/` raises DIVIDE_BY_ZERO under ANSI
+  * mode (the default) and returns NULL without it. */
 case class CosineSim(left: Expression, right: Expression)
     extends BinaryExpression {
 
   override def nullIntolerant: Boolean = true
 
   override def dataType: DataType = DoubleType
+  override def nullable: Boolean = true // ragged or null-element inputs
   override def prettyName: String = "graft_cosine"
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
@@ -38,12 +40,14 @@ case class CosineSim(left: Expression, right: Expression)
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
+    val n = x.numElements()
+    if (y.numElements() != n) return null
     var dot = 0.0
     var na = 0.0
     var nb = 0.0
     var i = 0
     while (i < n) {
+      if (x.isNullAt(i) || y.isNullAt(i)) return null
       val xv = x.getDouble(i)
       val yv = y.getDouble(i)
       dot += xv * yv
@@ -64,79 +68,23 @@ case class CosineSim(left: Expression, right: Expression)
       val xv = ctx.freshName("xv")
       val yv = ctx.freshName("yv")
       s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
+         |int $n = $a.numElements();
+         |${ev.isNull} = $b.numElements() != $n;
          |double $dot = 0.0, $na = 0.0, $nb = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
+         |for (int $i = 0; $i < $n && !${ev.isNull}; $i++) {
+         |  if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
          |  double $xv = $a.getDouble($i);
          |  double $yv = $b.getDouble($i);
          |  $dot += $xv * $yv;
          |  $na += $xv * $xv;
          |  $nb += $yv * $yv;
          |}
-         |${ev.value} = $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
+         |if (!${ev.isNull}) {
+         |  ${ev.value} = $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
+         |}
        """.stripMargin
     })
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): CosineSim =
     copy(left = newLeft, right = newRight)
-}
-
-object CosineSim {
-  val name = "graft_cosine"
-
-  private val info = new ExpressionInfo(classOf[CosineSim].getName, name)
-  private val builder: Seq[Expression] => Expression = { exprs =>
-    require(exprs.length == 2, s"$name takes exactly 2 arguments")
-    CosineSim(exprs.head, exprs(1))
-  }
-
-  /** Idempotent per-session registration (for sessions built without the
-    * extensions config). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .registerFunction(FunctionIdentifier(name), info, builder)
-}
-
-/** SparkSessionExtensions entry point — the canonical injection route:
-  *
-  *   spark.sql.extensions=graft.expressions.GraftExtensions
-  */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectFunction(
-      (FunctionIdentifier(CosineSim.name),
-        new ExpressionInfo(classOf[CosineSim].getName, CosineSim.name),
-        { exprs: Seq[Expression] =>
-          require(exprs.length == 2, s"${CosineSim.name} takes exactly 2 arguments")
-          CosineSim(exprs.head, exprs(1))
-        }))
-    ext.injectFunction(
-      (FunctionIdentifier(HammingDist.name),
-        new ExpressionInfo(classOf[HammingDist].getName, HammingDist.name),
-        { exprs: Seq[Expression] =>
-          require(exprs.length == 2, s"${HammingDist.name} takes exactly 2 arguments")
-          HammingDist(exprs.head, exprs(1))
-        }))
-    ext.injectFunction(
-      (FunctionIdentifier(NfcNormalize.name),
-        new ExpressionInfo(classOf[NfcNormalize].getName, NfcNormalize.name),
-        { exprs: Seq[Expression] =>
-          require(exprs.length == 1, s"${NfcNormalize.name} takes exactly 1 argument")
-          NfcNormalize(exprs.head)
-        }))
-    ext.injectFunction(
-      (FunctionIdentifier(FixMojibake.name),
-        new ExpressionInfo(classOf[FixMojibake].getName, FixMojibake.name),
-        { exprs: Seq[Expression] =>
-          require(exprs.length == 1, s"${FixMojibake.name} takes exactly 1 argument")
-          FixMojibake(exprs.head)
-        }))
-    ext.injectFunction(
-      (FunctionIdentifier(Shingles.name),
-        new ExpressionInfo(classOf[Shingles].getName, Shingles.name),
-        { exprs: Seq[Expression] =>
-          require(exprs.length == 2, s"${Shingles.name} takes exactly 2 arguments")
-          Shingles(exprs.head, exprs(1))
-        }))
-  }
 }

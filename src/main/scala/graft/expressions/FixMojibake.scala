@@ -2,9 +2,7 @@ package graft.expressions
 
 import java.nio.charset.{CharacterCodingException, Charset, CodingErrorAction, StandardCharsets}
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -58,8 +56,6 @@ case class FixMojibake(child: Expression) extends UnaryExpression {
 }
 
 object FixMojibake {
-  val name = "graft_fix_mojibake"
-
   private val Cp1252 = Charset.forName("windows-1252")
 
   /** One strict reverse pass: cp1252-encode then UTF-8-decode, or null if
@@ -104,16 +100,4 @@ object FixMojibake {
     }
     if (cur == u.toString) u else UTF8String.fromString(cur)
   }
-
-  private val info = new ExpressionInfo(classOf[FixMojibake].getName, name)
-  private val builder: Seq[Expression] => Expression = { exprs =>
-    require(exprs.length == 1, s"$name takes exactly 1 argument")
-    FixMojibake(exprs.head)
-  }
-
-  /** Idempotent per-session registration (for sessions built without the
-    * extensions config). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .registerFunction(FunctionIdentifier(name), info, builder)
 }

@@ -1,8 +1,6 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -68,20 +66,4 @@ case class HammingDist(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): HammingDist =
     copy(left = newLeft, right = newRight)
-}
-
-object HammingDist {
-  val name = "graft_hamming"
-
-  private val info = new ExpressionInfo(classOf[HammingDist].getName, name)
-  private val builder: Seq[Expression] => Expression = { exprs =>
-    require(exprs.length == 2, s"$name takes exactly 2 arguments")
-    HammingDist(exprs.head, exprs(1))
-  }
-
-  /** Idempotent per-session registration (for sessions built without the
-    * extensions config). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .registerFunction(FunctionIdentifier(name), info, builder)
 }

@@ -1,8 +1,6 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -70,20 +68,4 @@ case class NfcNormalize(child: Expression) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): NfcNormalize =
     copy(child = newChild)
-}
-
-object NfcNormalize {
-  val name = "graft_nfc"
-
-  private val info = new ExpressionInfo(classOf[NfcNormalize].getName, name)
-  private val builder: Seq[Expression] => Expression = { exprs =>
-    require(exprs.length == 1, s"$name takes exactly 1 argument")
-    NfcNormalize(exprs.head)
-  }
-
-  /** Idempotent per-session registration (for sessions built without the
-    * extensions config). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .registerFunction(FunctionIdentifier(name), info, builder)
 }

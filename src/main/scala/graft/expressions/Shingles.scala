@@ -1,8 +1,6 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
@@ -81,19 +79,4 @@ case class Shingles(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Shingles =
     copy(left = newLeft, right = newRight)
-}
-
-object Shingles {
-  val name = "graft_shingles"
-
-  private val info = new ExpressionInfo(classOf[Shingles].getName, name)
-  private val builder: Seq[Expression] => Expression = { exprs =>
-    require(exprs.length == 2, s"$name takes exactly 2 arguments")
-    Shingles(exprs.head, exprs(1))
-  }
-
-  /** Idempotent per-session registration. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .registerFunction(FunctionIdentifier(name), info, builder)
 }

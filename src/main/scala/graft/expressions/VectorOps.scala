@@ -1,8 +1,6 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, QuaternaryExpression, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, QuaternaryExpression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType}
@@ -17,36 +15,56 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType,
   *
   * IEEE parity: every accumulator runs the exact element-order left fold
   * of the composed formulation (`acc = 0.0; acc += (x-y)*(x-y)` ascending
-  * i), and argmin keeps the first strict minimum (codes ascending) —
-  * byte-identical to `least(struct(d, c)...)` / `array_sort(struct(d,
-  * cell))[0]`, and to the DuckDB oracles replicating those folds. */
+  * i), argmin keeps the first strict minimum (codes ascending) and
+  * comparisons order NaN above every value, as SQL does — byte-identical
+  * to `least(struct(d, c)...)` / `array_sort(struct(d, cell))[0]`, and to
+  * the DuckDB oracles replicating those folds. */
 object VectorKernel {
 
+  /** True iff `emb` has elements `from until from + len`, none null. A
+    * composed fold over a shorter or null-holding slice is null (zip_with
+    * pads the short side with nulls). */
+  private def complete(emb: ArrayData, from: Int, len: Int): Boolean = {
+    if (emb.numElements() < from + len) return false
+    var i = from
+    while (i < from + len) {
+      if (emb.isNullAt(i)) return false
+      i += 1
+    }
+    true
+  }
+
   /** codes[j] = argmin over c of sqdist(emb[j*sub .. j*sub+sub-1],
-    * flat[((j*k)+c)*sub ..]), first-on-tie. m=1 is IVF cell routing. */
+    * flat[((j*k)+c)*sub ..]), first-on-tie, with sub = flat.length/(m*k)
+    * (the codebook's subvector width). m=1 is IVF cell routing. A subspace
+    * whose slice is short or holds a null gets code 0: every composed
+    * distance is null there, and `least` orders struct(null, c) by c;
+    * elements past m*sub are ignored, as `slice` ignores them. */
   def argminCodes(emb: ArrayData, flat: Array[Double], m: Int, k: Int): ArrayData = {
-    val dim = emb.numElements()
-    val sub = dim / m
+    val sub = flat.length / (m * k)
     val out = new Array[Any](m)
     var j = 0
     while (j < m) {
-      var bestD = Double.PositiveInfinity
+      val embBase = j * sub
       var bestC = 0
-      var c = 0
-      while (c < k) {
-        var acc = 0.0
-        var i = 0
-        val embBase = j * sub
-        val cbBase = (j * k + c) * sub
-        while (i < sub) {
-          val x = emb.getDouble(embBase + i)
-          val y = flat(cbBase + i)
-          val d = x - y
-          acc += d * d
-          i += 1
+      if (complete(emb, embBase, sub)) {
+        var bestD = Double.NaN
+        var c = 0
+        while (c < k) {
+          var acc = 0.0
+          var i = 0
+          val cbBase = (j * k + c) * sub
+          while (i < sub) {
+            val x = emb.getDouble(embBase + i)
+            val y = flat(cbBase + i)
+            val d = x - y
+            acc += d * d
+            i += 1
+          }
+          // SQL order: NaN sorts above every value, so it never wins
+          if (c == 0 || (!acc.isNaN && (bestD.isNaN || acc < bestD))) { bestD = acc; bestC = c }
+          c += 1
         }
-        if (acc < bestD) { bestD = acc; bestC = c }
-        c += 1
       }
       out(j) = bestC
       j += 1
@@ -75,10 +93,13 @@ object VectorKernel {
   }
 
   /** Sign-LSH bucket: bit b set iff dot(emb, plane_b) > 0, plane_b =
-    * flat[b*dim .. b*dim+dim-1]. Same left-fold dot as the composed
-    * `aggregate(zip_with(a, b, _*_), 0.0, _+_)`. */
+    * flat[b*dim .. b*dim+dim-1] with dim = flat.length/bits. Same left-fold
+    * dot as the composed `aggregate(zip_with(a, b, _*_), 0.0, _+_)`. An
+    * embedding of another length or with a null element makes every
+    * composed dot null, and `when(null > 0, ...)` sets no bit: bucket 0. */
   def lshBucket(emb: ArrayData, flat: Array[Double], bits: Int): Long = {
-    val dim = emb.numElements()
+    val dim = flat.length / bits
+    if (emb.numElements() != dim || !complete(emb, 0, dim)) return 0L
     var bucket = 0L
     var b = 0
     while (b < bits) {
@@ -89,7 +110,7 @@ object VectorKernel {
         acc += emb.getDouble(i) * flat(base + i)
         i += 1
       }
-      if (acc > 0) bucket += (1L << b)
+      if (acc > 0 || acc.isNaN) bucket += (1L << b) // SQL: NaN > 0
       b += 1
     }
     bucket
@@ -178,7 +199,9 @@ case class LshBucket(first: Expression, second: Expression, third: Expression)
 }
 
 /** `graft_int_dot(a, b)` — exact integer dot of two array<int> columns
-  * (both sides row data, unlike the literal-table kernels above). See
+  * (both sides row data, unlike the literal-table kernels above). Null,
+  * as the composed `aggregate(zip_with(...))` fold gives, when the lengths
+  * differ or any element is null; an empty pair is 0. See
   * [[VectorKernel.intDot]]. */
 case class IntDot(left: Expression, right: Expression)
     extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
@@ -212,40 +235,4 @@ case class IntDot(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): IntDot =
     copy(left = newLeft, right = newRight)
-}
-
-object IntDot {
-  val name = "graft_int_dot"
-  private val info = new ExpressionInfo(classOf[IntDot].getName, name)
-  private val builder: Seq[Expression] => Expression = { exprs =>
-    require(exprs.length == 2, s"$name takes exactly 2 arguments")
-    IntDot(exprs(0), exprs(1))
-  }
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .registerFunction(FunctionIdentifier(name), info, builder)
-}
-
-object ArgminCodes {
-  val name = "graft_argmin_codes"
-  private val info = new ExpressionInfo(classOf[ArgminCodes].getName, name)
-  private val builder: Seq[Expression] => Expression = { exprs =>
-    require(exprs.length == 4, s"$name takes exactly 4 arguments")
-    ArgminCodes(exprs(0), exprs(1), exprs(2), exprs(3))
-  }
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .registerFunction(FunctionIdentifier(name), info, builder)
-}
-
-object LshBucket {
-  val name = "graft_lsh_bucket"
-  private val info = new ExpressionInfo(classOf[LshBucket].getName, name)
-  private val builder: Seq[Expression] => Expression = { exprs =>
-    require(exprs.length == 3, s"$name takes exactly 3 arguments")
-    LshBucket(exprs(0), exprs(1), exprs(2))
-  }
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .registerFunction(FunctionIdentifier(name), info, builder)
 }

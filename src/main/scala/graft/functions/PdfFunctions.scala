@@ -1,7 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions.udf
+
+import graft.html.Html
+import graft.pdf.Pdf
 
 /** Ad-hoc SQL surface for the extraction kernel (SURVEY.md §2.8(b)): scalar
   * functions usable from `spark.sql(...)`. The typed `ExtractJob` pipeline
@@ -12,64 +18,44 @@ import org.apache.spark.sql.functions.udf
   */
 object PdfFunctions {
 
-  private val pdf2txtF = (bytes: Array[Byte]) =>
-    if (bytes == null) null else graft.pdf.Pdf.pdf2txt(bytes)
+  /** A UDF over a binary column that maps a null payload to null. */
+  private def bytesUdf[R: TypeTag](f: Array[Byte] => R): UserDefinedFunction =
+    udf((bytes: Array[Byte]) => if (bytes == null) null.asInstanceOf[R] else f(bytes))
 
-  /** null on malformed input instead of failing the task. */
-  private val pdf2txtSafeF = (bytes: Array[Byte]) =>
-    if (bytes == null) null
-    else try graft.pdf.Pdf.pdf2txt(bytes) catch { case _: Exception => null }
+  private val htmlImageRefsUdf = bytesUdf(Html.imageRefs)
+  private val htmlLinkRefsUdf = bytesUdf(Html.linkRefs)
+  private val htmlAnchorsUdf = bytesUdf(Html.anchors)
+  private val htmlTablesUdf = bytesUdf(Html.tableCells)
+  private val htmlDocMetaUdf = bytesUdf(Html.docMeta)
 
-  private val pdf2pagesF = (bytes: Array[Byte]) =>
-    if (bytes == null) null else graft.pdf.Pdf.pdf2pages(bytes)
+  /** Every SQL name and its UDF. `pdf2txt_safe` gives null on malformed
+    * input instead of failing the task. */
+  private val all: Seq[(String, UserDefinedFunction)] = Seq(
+    "pdf2txt" -> bytesUdf(Pdf.pdf2txt),
+    "pdf2txt_safe" -> bytesUdf(b => try Pdf.pdf2txt(b) catch { case _: Exception => null }),
+    "pdf2pages" -> bytesUdf(Pdf.pdf2pages),
+    "html2txt" -> bytesUdf(Html.html2txt),
+    "html_image_refs" -> htmlImageRefsUdf,
+    "html_link_refs" -> htmlLinkRefsUdf,
+    "html_anchors" -> htmlAnchorsUdf,
+    "html_tables" -> htmlTablesUdf,
+    "html_doc_meta" -> htmlDocMetaUdf)
 
-  private val html2txtF = (bytes: Array[Byte]) =>
-    if (bytes == null) null else graft.html.Html.html2txt(bytes)
-
-  private val htmlImageRefsF = (bytes: Array[Byte]) =>
-    if (bytes == null) null else graft.html.Html.imageRefs(bytes)
+  def register(spark: SparkSession): Unit =
+    all.foreach { case (name, f) => spark.udf.register(name, f) }
 
   /** Column form of the HTML image-ref extractor (typed pipelines). */
-  def htmlImageRefs(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    udf(htmlImageRefsF).apply(c)
-
-  private val htmlLinkRefsF = (bytes: Array[Byte]) =>
-    if (bytes == null) null else graft.html.Html.linkRefs(bytes)
+  def htmlImageRefs(c: Column): Column = htmlImageRefsUdf(c)
 
   /** Column form of the HTML outlink extractor (in-content hrefs). */
-  def htmlLinkRefs(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    udf(htmlLinkRefsF).apply(c)
-
-  private val htmlAnchorsF = (bytes: Array[Byte]) =>
-    if (bytes == null) null else graft.html.Html.anchors(bytes)
+  def htmlLinkRefs(c: Column): Column = htmlLinkRefsUdf(c)
 
   /** Column form of the (href, anchor text) pair extractor. */
-  def htmlAnchors(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    udf(htmlAnchorsF).apply(c)
-
-  private val htmlTablesF = (bytes: Array[Byte]) =>
-    if (bytes == null) null else graft.html.Html.tableCells(bytes)
+  def htmlAnchors(c: Column): Column = htmlAnchorsUdf(c)
 
   /** Column form of the table-cell extractor: (table, row, col, text). */
-  def htmlTables(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    udf(htmlTablesF).apply(c)
-
-  private val htmlDocMetaF = (bytes: Array[Byte]) =>
-    if (bytes == null) null else graft.html.Html.docMeta(bytes)
+  def htmlTables(c: Column): Column = htmlTablesUdf(c)
 
   /** Column form of the head-metadata extractor: (title, description). */
-  def htmlDocMeta(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    udf(htmlDocMetaF).apply(c)
-
-  def register(spark: SparkSession): Unit = {
-    spark.udf.register("pdf2txt", udf(pdf2txtF))
-    spark.udf.register("pdf2txt_safe", udf(pdf2txtSafeF))
-    spark.udf.register("pdf2pages", udf(pdf2pagesF))
-    spark.udf.register("html2txt", udf(html2txtF))
-    spark.udf.register("html_image_refs", udf(htmlImageRefsF))
-    spark.udf.register("html_link_refs", udf(htmlLinkRefsF))
-    spark.udf.register("html_anchors", udf(htmlAnchorsF))
-    spark.udf.register("html_tables", udf(htmlTablesF))
-    spark.udf.register("html_doc_meta", udf(htmlDocMetaF))
-  }
+  def htmlDocMeta(c: Column): Column = htmlDocMetaUdf(c)
 }

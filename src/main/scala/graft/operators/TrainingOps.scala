@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.expressions.NativeFunctions
 
 /** Large-scale training-data pipeline operators, Spark-first: every op is
   * pure Catalyst expressions (whole-stage codegen, no UDFs) unless noted.
@@ -36,10 +37,8 @@ object TrainingOps {
     * transform(sequence, i -> concat_ws(slice)))` formulation, whose
     * interpreted higher-order lambdas dominated every gram-family query:
     * see graft.expressions.ShingleKernel). */
-  def shingles(text: Column, k: Int): Column = {
-    SparkSession.getActiveSession.foreach(graft.expressions.Shingles.register)
-    call_function(graft.expressions.Shingles.name, text, lit(k))
-  }
+  def shingles(text: Column, k: Int): Column =
+    NativeFunctions.call("graft_shingles", text, lit(k))
 
   /** FNV-1a 64-bit over a string (shingle base hash). */
   @inline private def fnv64(s: String): Long = {
@@ -257,7 +256,7 @@ object TrainingOps {
   def hammingDupPairsFromSig(sig: DataFrame, idCol: String,
                              maxHamming: Int = 3, maxBucket: Int = 64): DataFrame = {
     require(maxHamming <= 3, "banding into 4 bands is exact only for maxHamming <= 3")
-    graft.expressions.HammingDist.register(sig.sparkSession)
+    NativeFunctions.register(sig.sparkSession)
     val banded = sig
       .select(col(idCol).as("doc_id"), col("simhash"),
         explode(sequence(lit(0), lit(3))).as("band"))
@@ -311,21 +310,11 @@ object TrainingOps {
 
   // ---------- embedding similarity ----------
 
-  private def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0d), (acc, v) => acc + v)
-
-  private def norm(a: Column): Column =
-    sqrt(aggregate(a, lit(0.0d), (acc, v) => acc + v * v))
-
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
-
   /** Fused cosine via the native codegen expression (bitwise-identical to
-    * [[cosine]], see graft.expressions.CosineSim); registers the function
-    * idempotently on the dataframe's session. */
-  private def fusedCosine(df: DataFrame, a: String, b: String): Column = {
-    graft.expressions.CosineSim.register(df.sparkSession)
-    expr(s"${graft.expressions.CosineSim.name}($a, $b)")
-  }
+    * the composed `aggregate(zip_with(...))` fold, see
+    * graft.expressions.CosineSim) on the dataframe's session. */
+  private def fusedCosine(df: DataFrame, a: String, b: String): Column =
+    NativeFunctions.call(df.sparkSession, "graft_cosine", col(a), col(b))
 
   /** Upcast the float embedding to array<double> once: every downstream
     * dot/norm is then pure double IEEE arithmetic in deterministic
@@ -391,14 +380,13 @@ object TrainingOps {
     * loop). Exact integer sums are order-independent, so the scores are
     * bitwise unchanged. */
   def knnInt8(embeddings: DataFrame, queries: DataFrame, k: Int = 10): DataFrame = {
-    SparkSession.getActiveSession.foreach(graft.expressions.IntDot.register)
-    def selfDot(v: Column): Column = call_function(graft.expressions.IntDot.name, v, v)
+    def selfDot(v: Column): Column = NativeFunctions.call("graft_int_dot", v, v)
     val base = quantizeInt8(embeddings)
       .select(col("vec_id"), col("qvec"), selfDot(col("qvec")).as("self_q"))
     val q = broadcast(quantizeInt8(queries)
       .select(col("vec_id").as("query_id"), col("qvec").as("q_qvec"),
         selfDot(col("qvec")).as("q_self")))
-    val dotInt = call_function(graft.expressions.IntDot.name, col("qvec"), col("q_qvec"))
+    val dotInt = NativeFunctions.call("graft_int_dot", col("qvec"), col("q_qvec"))
     // symmetric scaling cancels out of the cosine exactly:
     // cos(dequant) = dot_q / sqrt(self_a * self_q) — pure integers under
     // one sqrt and one divide, so the score is bitwise cross-engine
@@ -448,10 +436,8 @@ object TrainingOps {
     * centroid)...))` composition whose interpreted folds re-expanded the
     * subvector slices per centroid — VERDICT r5 item #1; see
     * graft.expressions.VectorKernel). */
-  private[graft] def argminCodesCol(emb: Column, flat: Array[Double], m: Int, k: Int): Column = {
-    SparkSession.getActiveSession.foreach(graft.expressions.ArgminCodes.register)
-    call_function(graft.expressions.ArgminCodes.name, emb, lit(flat), lit(m), lit(k))
-  }
+  private[graft] def argminCodesCol(emb: Column, flat: Array[Double], m: Int, k: Int): Column =
+    NativeFunctions.call("graft_argmin_codes", emb, lit(flat), lit(m), lit(k))
 
   /** The per-vector PQ code array over `emb` (array<double>). */
   private def pqCodesCol(codebook: Array[Array[Array[Double]]], emb: Column): Column =
@@ -559,9 +545,8 @@ object TrainingOps {
     // native kernel: one fused loop per row over the plane table instead
     // of `bits` interpreted dot folds (byte-identical: same left-fold dot
     // per plane, same `> 0` sign rule, same bit weights)
-    SparkSession.getActiveSession.foreach(graft.expressions.LshBucket.register)
     val flat = (0 until bits).flatMap(b => hyperplane(planeBase + b, dim)).toArray
-    call_function(graft.expressions.LshBucket.name, emb, lit(flat), lit(bits))
+    NativeFunctions.call("graft_lsh_bucket", emb, lit(flat), lit(bits))
   }
 
   /** ANN via sign-LSH bucketing: cosine evaluated only within buckets —
@@ -1402,7 +1387,7 @@ object TrainingOps {
     * once per eval snapshot and persist it next to the corpus. */
   def decontaminateBloom(docs: DataFrame, evalDocs: DataFrame, n: Int = 13,
                          bitsPerItem: Int = 12): DataFrame = {
-    graft.expressions.BloomContains.register(docs.sparkSession)
+    NativeFunctions.register(docs.sparkSession)
     val evalGrams = evalDocs
       .select(explode(array_distinct(shingles(col("text"), n))).as("g")).distinct()
     val bloom = buildBloom(evalGrams, "g", bitsPerItem)
@@ -1765,8 +1750,7 @@ object TrainingOps {
     * DuckDB's `nfc_normalize` implements the same Unicode algorithm, so
     * the whole output is cross-engine hash-comparable. */
   def normalizeNfc(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    graft.expressions.NfcNormalize.register(docs.sparkSession)
-    docs.withColumn(textCol, expr(s"graft_nfc($textCol)"))
+    docs.withColumn(textCol, NativeFunctions.call(docs.sparkSession, "graft_nfc", col(textCol)))
   }
 
   /** Mojibake repair over document text — reverses UTF-8-read-as-cp1252
@@ -1777,8 +1761,8 @@ object TrainingOps {
     * UTF-8) is a fixpoint — run it unconditionally before quality/dedup.
     * One narrow pass, no shuffle; ASCII rows short-circuit in codegen. */
   def fixMojibake(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    graft.expressions.FixMojibake.register(docs.sparkSession)
-    docs.withColumn(textCol, expr(s"graft_fix_mojibake($textCol)"))
+    docs.withColumn(textCol,
+      NativeFunctions.call(docs.sparkSession, "graft_fix_mojibake", col(textCol)))
   }
 
   /** Small-file compaction planner — the table-maintenance op next to

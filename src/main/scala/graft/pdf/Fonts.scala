@@ -308,12 +308,6 @@ final class Fonts(storage: ObjectStorage, fontsDict: Dict) {
     // unknown font name → throw like the reference's map::at
     if (curCodes == null) widths(currentFont)
   }
-
-  /** fonts.cc:332-336 */
-  def getScales(): (Float, Float) = {
-    if (types(currentFont) == OTHER) (0.001f, 0.001f)
-    else applyMatrixNorm(fontMatrixType3(currentFont), 1f, 1f)
-  }
 }
 
 object Fonts {

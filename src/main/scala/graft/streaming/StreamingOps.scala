@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import graft.expressions.NativeFunctions
 
 /** Streaming operators beyond the micro-batch extraction front end:
   * watermarked event-time windowing and custom keyed state — the two
@@ -246,7 +247,6 @@ object StreamingOps {
     import graft.operators.TrainingOps
     val spark = evalDocs.sparkSession
     import spark.implicits._
-    graft.expressions.BloomContains.register(spark)
     val evalGrams = evalDocs
       .select(explode(array_distinct(TrainingOps.shingles(col("text"), n))).as("g")).distinct()
     val bloom = TrainingOps.buildBloom(evalGrams, "g", bitsPerItem)
@@ -254,7 +254,7 @@ object StreamingOps {
     val hashes = evalGrams.select(xxhash64(col("g")).as("h")).as[Long].collect()
     val hashLit = lit(hashes)
     !exists(array_distinct(TrainingOps.shingles(col("text"), n)),
-      g => call_function(graft.expressions.BloomContains.name, unbase64(lit(b64)), xxhash64(g)) &&
+      g => NativeFunctions.call(spark, "graft_bloom_contains", unbase64(lit(b64)), xxhash64(g)) &&
         array_contains(hashLit, xxhash64(g)))
   }
 
@@ -299,8 +299,7 @@ object StreamingOps {
     * batch ≡ stream by construction and a restart resumes from the last
     * committed batch. */
   def runRepairTextStream(spark: SparkSession, inDir: String, outDir: String): Unit = {
-    graft.expressions.FixMojibake.register(spark)
-    graft.expressions.NfcNormalize.register(spark)
+    NativeFunctions.register(spark)
     val schema = org.apache.spark.sql.Encoders.product[TimedDoc].schema
     val in = spark.readStream.schema(schema).parquet(inDir)
     val q: StreamingQuery = in

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
-import graft.expressions.BloomContains
+import graft.expressions.{BloomContains, NativeFunctions}
 
 /** Plan-embedded bloom filter: the native membership expression and the
   * bloom-prefiltered decontamination path. */
@@ -34,7 +34,7 @@ class BloomContainsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("expression evaluates in codegen and agrees with the interpreted check") {
-    BloomContains.register(spark)
+    NativeFunctions.register(spark)
     val members = Array(1L, 42L, 9999L)
     val b64 = java.util.Base64.getEncoder.encodeToString(BloomContains.build(members))
     val df = spark.range(10000)
@@ -66,7 +66,7 @@ class BloomContainsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("malformed filters (empty / non-power-of-two binary) return false, never crash") {
-    BloomContains.register(spark)
+    NativeFunctions.register(spark)
     assert(!BloomContains.contains(Array.empty[Byte], 42L))
     assert(!BloomContains.contains(new Array[Byte](3), 42L)) // 24 bits: not a power of two
     val b64ok = java.util.Base64.getEncoder.encodeToString(BloomContains.build(Array(42L)))

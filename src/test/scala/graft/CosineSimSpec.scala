@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-/** Native codegen cosine expression: bitwise parity with the composed
-  * builtin fold, codegen participation, and extensions registration. */
+/** Native codegen cosine expression: whole-stage codegen participation,
+  * with the function injected by the extensions conf. Its values are
+  * checked against the composed fold in NativeFunctionsSpec. */
 class CosineSimSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   @transient private var spark: SparkSession = _
@@ -23,22 +24,6 @@ class CosineSimSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
-  test("bitwise parity with the composed aggregate/zip_with fold") {
-    val s = spark
-    import s.implicits._
-    val r = new scala.util.Random(7)
-    val rows = (1 to 200).map(_ => (Array.fill(64)(r.nextDouble() - 0.5), Array.fill(64)(r.nextDouble() - 0.5)))
-    val df = s.createDataset(rows).toDF("a", "b")
-    val composed = df.select(
-      (aggregate(zip_with(col("a"), col("b"), (x, y) => x * y), lit(0.0), (acc, v) => acc + v) /
-        (sqrt(aggregate(col("a"), lit(0.0), (acc, v) => acc + v * v)) *
-          sqrt(aggregate(col("b"), lit(0.0), (acc, v) => acc + v * v)))).as("c")).collect().map(_.getDouble(0))
-    val fused = df.select(expr("graft_cosine(a, b)").as("c")).collect().map(_.getDouble(0))
-    composed.zip(fused).foreach { case (x, y) =>
-      assert(java.lang.Double.doubleToRawLongBits(x) == java.lang.Double.doubleToRawLongBits(y))
-    }
-  }
-
   test("expression participates in whole-stage codegen") {
     // a range source (not a local relation, which would constant-fold)
     val df = spark.range(8)
@@ -47,12 +32,5 @@ class CosineSimSpec extends AnyFunSuite with BeforeAndAfterAll {
     val p = df.queryExecution.executedPlan.toString
     assert(p.contains("*(1)") && p.contains("graft_cosine"), p)
     assert(df.collect().length == 8)
-  }
-
-  test("null and type behavior") {
-    val s = spark
-    val row = s.sql("SELECT graft_cosine(CAST(NULL AS ARRAY<DOUBLE>), array(1.0d)) AS c").collect()(0)
-    assert(row.isNullAt(0))
-    intercept[Exception] { s.sql("SELECT graft_cosine(array('x'), array(1.0d))").collect() }
   }
 }

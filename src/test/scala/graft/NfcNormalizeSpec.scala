@@ -22,27 +22,6 @@ class NfcNormalizeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
-  test("NFC composition: decomposed sequences compose, NFC input is a fixpoint") {
-    val s = spark
-    import s.implicits._
-    val rows = Seq(
-      ("cafe\u0301", "caf\u00e9"),       // combining acute composes
-      ("caf\u00e9", "caf\u00e9"),        // precomposed passes through
-      ("ascii only", "ascii only"),      // ASCII fast path
-      ("", ""),
-      ("\u1100\u1161", "\uac00"),       // Hangul jamo -> syllable
-      ("A\u030a", "\u00c5"),             // A + ring -> Angstrom letter
-      ("\u2126", "\u03a9"),              // OHM SIGN: canonical singleton -> Omega
-      ("\ufb01", "\ufb01"))              // fi ligature: NFC keeps (NFKC wouldn't)
-    val df = s.createDataset(rows).toDF("in", "want")
-    val got = df.select(expr("graft_nfc(in)").as("out"), col("want")).collect()
-    got.foreach(r => assert(r.getString(0) == r.getString(1),
-      s"'${r.getString(0)}' != '${r.getString(1)}'"))
-    // null propagation + arity/type guards
-    assert(s.sql("SELECT graft_nfc(CAST(NULL AS STRING))").collect()(0).isNullAt(0))
-    intercept[Exception] { s.sql("SELECT graft_nfc(1)").collect() }
-  }
-
   test("expression participates in whole-stage codegen") {
     val df = spark.range(8)
       .select(concat(lit("e\u0301 "), col("id").cast("string")).as("t"))

@@ -605,57 +605,6 @@ class QueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(qz(1)._2 == Seq(0, 0, 0) && qz(1)._3 == 0.0, s"got $qz")
   }
 
-  /** Runs `body` with every projection either compiled (no interpreted
-    * fallback) or interpreted, so a native expression is checked on both
-    * of its evaluation paths. */
-  private def withCodegenMode[T](mode: String)(body: => T): T = {
-    val confs = Seq("spark.sql.codegen.factoryMode" -> mode,
-      "spark.sql.codegen.wholeStage" -> (mode == "CODEGEN_ONLY").toString,
-      "spark.sql.codegen.fallback" -> "false")
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-  }
-
-  test("graft_int_dot matches the composed zip_with/aggregate fold, incl. null and negatives") {
-    val sp = spark; import sp.implicits._
-    import org.apache.spark.sql.functions._
-    graft.expressions.IntDot.register(sp)
-    val rnd = new scala.util.Random(7)
-    def vec(n: Int): Seq[Option[Int]] = Seq.fill(n)(Some(rnd.nextInt(255) - 127))
-    val rows = (1 to 50).map(i => (i.toLong, vec(64), vec(64))) ++ Seq(
-      (51L, Seq.fill(64)(Some(-127)), Seq.fill(64)(Some(127))),
-      (52L, vec(64), vec(63)),                // b shorter: zip_with pads it with a null
-      (53L, vec(3), vec(5)),                  // a shorter
-      (54L, vec(4).updated(2, None), vec(4)), // null element in a
-      (55L, vec(4), vec(4).updated(0, None)), // null element in b
-      (56L, Seq.empty[Option[Int]], Seq.empty[Option[Int]]))
-    val nullRows = Set(52L, 53L, 54L, 55L)
-    val composed = aggregate(
-      zip_with(col("a"), col("b"), (x, y) => x.cast("long") * y),
-      lit(0L), (acc, v) => acc + v)
-    val native = call_function(graft.expressions.IntDot.name, col("a"), col("b"))
-    for (mode <- Seq("CODEGEN_ONLY", "NO_CODEGEN")) withCodegenMode(mode) {
-      // the exchange keeps the projection out of ConvertToLocalRelation,
-      // which would evaluate it interpreted at planning time
-      val got = rows.toDF("id", "a", "b").repartition(2)
-        .select(col("id"), composed, native)
-        .as[(Long, Option[Long], Option[Long])].collect()
-      assert(got.length == rows.length)
-      got.foreach { case (id, c, n) =>
-        assert(n == c, s"$mode id=$id: native $n, composed $c")
-        assert(n.isEmpty == nullRows(id), s"$mode id=$id: $n")
-      }
-    }
-    // a null array propagates like the composed fold
-    val df = rows.toDF("id", "a", "b")
-    val withNull = df.select(col("id"),
-      when(col("id") === 1L, lit(null).cast("array<int>")).otherwise(col("a")).as("a"), col("b"))
-    assert(withNull.where(col("id") === 1L)
-      .select(call_function(graft.expressions.IntDot.name, col("a"), col("b")))
-      .collect().head.isNullAt(0))
-  }
-
   test("knnInt8: quantized cosine tracks float cosine (recall vs brute), zero vector ranks last") {
     val sp = spark; import sp.implicits._
     import org.apache.spark.sql.functions.col

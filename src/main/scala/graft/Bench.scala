@@ -369,8 +369,11 @@ object Bench {
 
     // per-query timings at the driver-provided parallelism
     val sq = session(cpus)
+    // a query that throws is timed like the others; its count() of -1 marks it failed
+    val failedQueries = scala.collection.mutable.ArrayBuffer.empty[String]
     val queryTimes = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val (_, sec) = time { try fn(sq, sfDir).count() catch { case _: Throwable => -1L } }
+      val (rows, sec) = time { try fn(sq, sfDir).count() catch { case _: Throwable => -1L } }
+      if (rows < 0) failedQueries += name
       name -> sec
     }
     sq.stop()
@@ -412,7 +415,8 @@ object Bench {
       "\"kernel_pairs_media_per_sec_4_16\":" + pairsJson(kernelPairs.toSeq),
       "\"kernel_probe_bracket\":" + kernelBracket.map(b => s"[${b._1},${b._2}]").mkString("[", ",", "]"),
       "\"kernel_pairs_clean\":" + kernelPairs.indices.map(kernelCleanIdx.contains).mkString("[", ",", "]"),
-      "\"query_sec\":" + queryTimes.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
+      "\"query_sec\":" + queryTimes.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}"),
+      "\"queries_failed\":" + failedQueries.map("\"" + _ + "\"").mkString("[", ",", "]")
     ).mkString("{", ",", "}")
     java.nio.file.Files.write(java.nio.file.Paths.get(evidencePath),
       evidence.getBytes("UTF-8"))
@@ -436,7 +440,8 @@ object Bench {
     val qs = (topQueries.map { case (k, v) => k -> num2(v) } ++
       Seq("queries_total" -> queryTimes.size.toString,
         "queries_omitted" -> omitted.toString,
-        "queries_omitted_sec" -> num2(omittedSec)) ++
+        "queries_omitted_sec" -> num2(omittedSec),
+        "queries_failed" -> failedQueries.size.toString) ++
       extras.map { case (k, v) => k -> num2(v) })
       .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     // keep the line under the driver's 2000-char stdout tail

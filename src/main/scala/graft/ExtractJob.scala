@@ -4,6 +4,8 @@ import scala.util.control.NonFatal
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession, SaveMode}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.AccumulatorV2
 
 /** Typed rows of the extraction pipeline (FIXTURES.md §1 / BASELINE input_hint). */
 object Model {
@@ -31,12 +33,47 @@ object Model {
   /** Output span: kind ∈ {text, pdf_text, error}; order 0-based contiguous. */
   case class OutSpan(doc_id: String, order: Int, kind: String, text: String, media_ref: String)
 
-  /** Per-media extraction result (tagged with the executing partition).
-    * `kind` is the content-sniffed payload family ("pdf" | "html") — it
-    * names the kernel that ran and becomes the `<kind>_text` output span
-    * kind. */
-  case class Extracted(media_ref: String, kind: String, ok: Boolean, text: String, error: String,
-                       bytes_in: Long, wall_us: Long, partition_id: Int)
+  /** Per-media extraction result. `kind` is the content-sniffed payload
+    * family ("pdf" | "html") — it names the kernel that ran and becomes the
+    * `<kind>_text` output span kind. */
+  case class Extracted(media_ref: String, kind: String, ok: Boolean, text: String, error: String)
+
+  /** What the kernel saw in one partition, counted while it ran.
+    * `failReasons` counts the failed media by "<sniffed kind>:<exception
+    * class>". Counts add with `+` (partition → lineage row → run metrics). */
+  case class KernelCounts(mediaIn: Long = 0L, mediaOk: Long = 0L, bytesIn: Long = 0L, wallUs: Long = 0L,
+                          failReasons: Map[String, Long] = Map.empty) {
+    def mediaFailed: Long = mediaIn - mediaOk
+    def +(o: KernelCounts): KernelCounts =
+      KernelCounts(mediaIn + o.mediaIn, mediaOk + o.mediaOk, bytesIn + o.bytesIn, wallUs + o.wallUs,
+        o.failReasons.foldLeft(failReasons) { case (m, (k, n)) => m.updated(k, m.getOrElse(k, 0L) + n) })
+  }
+
+  /** Kernel counts per (kernel branch, partition id). A key's last report
+    * wins, so a retried, speculative or recomputed task replaces its
+    * partition's counts instead of adding to them. */
+  class LineageCounts extends AccumulatorV2[((Int, Int), KernelCounts), Map[(Int, Int), KernelCounts]] {
+    private var parts = Map.empty[(Int, Int), KernelCounts]
+    override def isZero: Boolean = parts.isEmpty
+    override def copy(): LineageCounts = { val c = new LineageCounts; c.parts = parts; c }
+    override def reset(): Unit = parts = Map.empty
+    override def add(v: ((Int, Int), KernelCounts)): Unit = parts += v
+    override def merge(o: AccumulatorV2[((Int, Int), KernelCounts), Map[(Int, Int), KernelCounts]]): Unit =
+      parts ++= o.value
+    override def value: Map[(Int, Int), KernelCounts] = parts
+
+    /** The counts per partition id, both kernel branches summed. */
+    def byPartition: Map[Int, KernelCounts] = parts.toSeq.groupMapReduce(_._1._2)(_._2)(_ + _)
+  }
+
+  /** One row of `lineage/run=<id>`. */
+  case class LineageRow(partition_id: Int, media_in: Long, media_ok: Long, media_failed: Long,
+                        bytes_in: Long, wall_ms: Long, run_id: String, input_snapshot: String,
+                        fail_reasons: Map[String, Long])
+
+  /** The one row of `metrics/run=<id>`; a run without media has
+    * media_total = 0 and null sums. */
+  case class MetricsRow(media_total: Long, media_ok: Option[Long], bytes_total: Option[Long], run_id: String)
 }
 
 /** The Spark-native extraction pipeline (north rule):
@@ -51,7 +88,13 @@ object Model {
   *    re-extract per document;
   *  - the only wide exchanges are (a) the ref⋈media join — AQE picks
   *    broadcast when the ref set is small, sort-merge otherwise — and
-  *    (b) the extracted-text⋈spans join keyed on media_ref;
+  *    (b) the extracted-text⋈spans join, a shuffle join on media_ref
+  *    (merge hint): both inputs split across partitions, so no extracted
+  *    text is ever broadcast or collected to the driver;
+  *  - `run` is one pass: the kernel output streams once through that join
+  *    into the spans writer, nothing is persisted, and lineage is counted
+  *    inside the kernel's partitions (an accumulator the driver turns into
+  *    the lineage and metrics files);
   *  - skew from oversized PDFs is neutralized by repartitioning on
   *    (size_bucket, salt): the salt spreads same-sized blobs uniformly and
   *    size_bucket keeps 100 MB monsters from queueing behind each other;
@@ -81,21 +124,31 @@ object ExtractJob {
   /** The extraction kernel as a per-partition typed pass. The per-blob
     * error contract: a non-fatal kernel failure becomes a failed row of
     * the sniffed kind carrying the message; fatal errors (OOM, linkage,
-    * interrupts) propagate and fail the task. */
-  private def runKernel(work: Dataset[(String, Array[Byte])]): Dataset[Extracted] = {
+    * interrupts) propagate and fail the task. With `counts`, each task
+    * reports its partition's [[KernelCounts]] under (branch, partition id)
+    * when it completes. */
+  private def runKernel(work: Dataset[(String, Array[Byte])], branch: Int,
+                        counts: Option[LineageCounts]): Dataset[Extracted] = {
     import work.sparkSession.implicits._
     work.mapPartitions { it =>
-      val pid = TaskContext.getPartitionId()
+      val ctx = TaskContext.get()
+      var seen = KernelCounts()
+      counts.foreach(acc => ctx.addTaskCompletionListener[Unit] { _ =>
+        if (seen.mediaIn > 0) acc.add((branch, ctx.partitionId()) -> seen)
+      })
       it.map { case (ref, bytes) =>
         val t0 = System.nanoTime()
         val kind = sniff(bytes)
-        def row(ok: Boolean, text: String, error: String) =
-          Extracted(ref, kind, ok, text, error, bytes.length.toLong, (System.nanoTime() - t0) / 1000, pid)
-        try row(ok = true, kernel(kind, bytes), "")
-        catch {
-          case NonFatal(e) =>
-            row(ok = false, "", Option(e.getMessage).getOrElse(e.getClass.getSimpleName).take(200))
-        }
+        val (row, failure) =
+          try (Extracted(ref, kind, ok = true, kernel(kind, bytes), ""), None)
+          catch {
+            case NonFatal(e) =>
+              (Extracted(ref, kind, ok = false, "", Option(e.getMessage).getOrElse(e.getClass.getSimpleName).take(200)),
+                Some(s"$kind:${e.getClass.getName}"))
+          }
+        seen += KernelCounts(1L, if (row.ok) 1L else 0L, bytes.length.toLong, (System.nanoTime() - t0) / 1000,
+          failure.map(_ -> 1L).toMap)
+        row
       }
     }
   }
@@ -114,9 +167,12 @@ object ExtractJob {
     * The split predicate is on the size_bucket COLUMN, not
     * octet_length(bytes): both branch filters push down to the parquet
     * scan, so row-group min/max stats prune the heavy branch to almost
-    * nothing instead of re-reading every payload twice. */
+    * nothing instead of re-reading every payload twice.
+    *
+    * `counts`, when given, receives each kernel partition's lineage. */
   def extractMedia(media: DataFrame, neededRefs: DataFrame, numPartitions: Int,
-                   heavyBucket: Int = 22 /* 4 MB */)(implicit spark: SparkSession): Dataset[Extracted] = {
+                   heavyBucket: Int = 22 /* 4 MB */, counts: Option[LineageCounts] = None)
+                  (implicit spark: SparkSession): Dataset[Extracted] = {
     import spark.implicits._
     // AQE picks broadcast for a small ref set, sort-merge otherwise
     val work = media.join(neededRefs, Seq("media_ref"))
@@ -129,7 +185,7 @@ object ExtractJob {
     val heavy = ds(work.where(col("size_bucket") > heavyBucket)
       .withColumn("salt", pmod(xxhash64(col("media_ref")), lit(numPartitions)))
       .repartition(numPartitions, col("size_bucket"), col("salt")))
-    runKernel(small).union(runKernel(heavy))
+    runKernel(small, 0, counts).union(runKernel(heavy, 1, counts))
   }
 
   /** The pipeline's one composition: docs ⋈ media → kernel → ordered
@@ -148,15 +204,16 @@ object ExtractJob {
   /** Assemble the ordered span output. `extracted` rows are keyed by
     * media_ref. Only media spans join on media_ref — text spans carry
     * media_ref="" and would all land on ONE key; at scale that single hot
-    * key breaks a sort-merge fallback, so they bypass the join entirely
-    * and union back in. */
+    * key breaks a sort-merge join, so they bypass the join entirely and
+    * union back in. The join is a sort-merge join (merge hint): a
+    * broadcast would collect every extracted text on the driver. */
   def assembleSpans(docs: DataFrame, extracted: DataFrame)(implicit spark: SparkSession): DataFrame = {
     val exploded = docs.select(col("doc_id"), posexplode(col("spans")).as(Seq("order", "span")))
       .select(col("doc_id"), col("order"),
         col("span.kind").as("in_kind"), col("span.text").as("in_text"), col("span.media_ref").as("media_ref"))
     val mediaSpans = exploded.where(col("in_kind") =!= "text")
       .join(extracted.select(col("media_ref"), col("ok"), col("kind").as("x_kind"),
-        col("text").as("x_text")), Seq("media_ref"), "left")
+        col("text").as("x_text")).hint("merge"), Seq("media_ref"), "left")
       .select(
         col("doc_id"), col("order"),
         when(col("ok") === true, concat(col("x_kind"), lit("_text"))).otherwise(lit("error")).as("kind"),
@@ -193,8 +250,18 @@ object ExtractJob {
     val runs = committedSnapshots(outDir)
     val idx = runs.indexOf(asOfRun)
     require(idx >= 0, s"run '$asOfRun' is not committed in $outDir (have: ${runs.mkString(", ")})")
-    spark.read.parquet(runs.take(idx + 1).map(r => s"$outDir/spans_out/run=$r"): _*)
+    readSpans(runs.take(idx + 1).map(r => s"$outDir/spans_out/run=$r"))
   }
+
+  /** The schema `run` writes its spans with (`Model.OutSpan`, nullable as
+    * parquet reads it back). */
+  private val spansSchema: StructType =
+    StructType.fromDDL("doc_id STRING, `order` INT, kind STRING, text STRING, media_ref STRING")
+
+  /** Committed span directories, read with [[spansSchema]] instead of an
+    * inferred one (inference is a Spark job per read). */
+  private def readSpans(dirs: Seq[String])(implicit spark: SparkSession): DataFrame =
+    spark.read.schema(spansSchema).parquet(dirs: _*)
 
   /** Full job with resume + lineage + metrics; emulates Iceberg snapshot
     * commits with per-run staged directories plus an atomically-replaced
@@ -217,49 +284,36 @@ object ExtractJob {
 
     // resume: drop doc_ids present in COMMITTED runs only
     val docs = if (committedRuns.nonEmpty) {
-      val done = spark.read.parquet(committedRuns.map(spansDir): _*).select("doc_id").distinct()
+      val done = readSpans(committedRuns.map(spansDir)).select("doc_id").distinct()
       docs0.join(done, Seq("doc_id"), "left_anti")
     } else docs0
 
-    val extracted = extractMedia(media, mediaRefs(docs), parts)
-    // reused by the spans join + lineage/metrics aggregation; DISK_ONLY —
-    // the extracted text of a whole input split must not pin executor heap
-    extracted.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-
-    val spans = assembleSpans(docs, extracted.toDF())
+    // one pass: the kernel output streams once through the spans join into
+    // the writer (nothing persisted), and each kernel partition reports its
+    // lineage through `counts` as it finishes
+    val counts = new LineageCounts
+    spark.sparkContext.register(counts) // unnamed: the listener bus never carries the map
+    assembleSpans(docs, extractMedia(media, mediaRefs(docs), parts, counts = Some(counts)).toDF())
       .sortWithinPartitions("doc_id", "order")
-    spans.write.mode(SaveMode.Overwrite).parquet(spansDir(runId))
+      .write.mode(SaveMode.Overwrite).parquet(spansDir(runId))
 
-    // per-partition lineage (north rule: lineage + metrics alongside results)
-    val lineage = extracted.groupBy(col("partition_id"))
-      .agg(count(lit(1)).as("media_in"),
-        sum(when(col("ok"), 1L).otherwise(0L)).as("media_ok"),
-        sum(when(col("ok"), 0L).otherwise(1L)).as("media_failed"),
-        sum(col("bytes_in")).as("bytes_in"),
-        (sum(col("wall_us")) / 1000).cast("long").as("wall_ms"))
-      .withColumn("run_id", lit(runId))
-      .withColumn("input_snapshot", lit(outDir))
-    lineage.write.mode(SaveMode.Overwrite).parquet(s"$outDir/lineage/run=$runId")
+    // per-partition lineage (north rule: lineage + metrics alongside
+    // results) and the run metrics, from the driver-side counts
+    import spark.implicits._
+    val byPartition = counts.byPartition.toSeq.sortBy(_._1)
+    byPartition.map { case (pid, c) =>
+      LineageRow(pid, c.mediaIn, c.mediaOk, c.mediaFailed, c.bytesIn, c.wallUs / 1000, runId, outDir, c.failReasons)
+    }.toDS().coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$outDir/lineage/run=$runId")
+    val total = byPartition.map(_._2).reduceOption(_ + _)
+    Seq(MetricsRow(total.fold(0L)(_.mediaIn), total.map(_.mediaOk), total.map(_.bytesIn), runId))
+      .toDS().write.mode(SaveMode.Overwrite).parquet(s"$outDir/metrics/run=$runId")
 
-    // run metrics fold up from the just-written per-partition lineage
-    // (guide §1.2: don't pay a second pass over the persisted extraction —
-    // sums of per-partition sums are the same exact integers; the empty-run
-    // coalesce keeps media_total = 0 with null sums, matching the direct
-    // aggregate's shape on zero media rows)
-    val metrics = spark.read.parquet(s"$outDir/lineage/run=$runId")
-      .agg(coalesce(sum(col("media_in")), lit(0L)).as("media_total"),
-        sum(col("media_ok")).as("media_ok"),
-        sum(col("bytes_in")).as("bytes_total"))
-      .withColumn("run_id", lit(runId))
-    metrics.write.mode(SaveMode.Overwrite).parquet(s"$outDir/metrics/run=$runId")
-
-    extracted.unpersist()
     // snapshot commit: the run becomes visible only via the atomic swap
     val allRuns = (committedRuns :+ runId).distinct
     val tmp = Paths.get(s"$outDir/_committed.tmp")
     Files.write(tmp, allRuns.mkString("\n").getBytes("UTF-8"))
     Files.move(tmp, committedFile, StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
-    spark.read.parquet(allRuns.map(spansDir): _*)
+    readSpans(allRuns.map(spansDir))
   }
 
   /** Snapshot-expiry housekeeping (the Iceberg `expire_snapshots` /

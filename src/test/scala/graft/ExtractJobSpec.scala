@@ -49,6 +49,78 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(totalIn == built.media.size, s"lineage media_in $totalIn vs ${built.media.size}")
   }
 
+  test("lineage and metrics by value: media, failures, reasons and bytes of each commit") {
+    implicit val s: SparkSession = spark
+    import s.implicits._
+    val built = Corpus.build(nDocs = 64, heavyEvery = 16)
+    val media = s.createDataset(built.media).toDF()
+    val bytesOf = built.media.map(m => m.media_ref -> m.bytes.length.toLong).toMap
+    val garbage = built.expected.filter(_.kind == "error").map(_.media_ref).toSet
+    val out = tmpDir()
+    // two commits: the second is handed every doc and resumes past the first's
+    val (first, rest) = built.docs.splitAt(24)
+    for ((runId, input, extracted) <- Seq(("c1", first, first), ("c2", built.docs, rest))) {
+      val refs = extracted.flatMap(_.spans).filter(_.kind != "text").map(_.media_ref).distinct
+      val failedRows = ExtractJob.extractMedia(media, refs.toDF("media_ref"), 4).where(!$"ok").count()
+      ExtractJob.run(s.createDataset(input).toDF(), media, out, runId, 4)
+      val lin = s.read.parquet(s"$out/lineage/run=$runId")
+        .as[(Int, Long, Long, Long, Long, Long, String, String, Map[String, Long])].collect()
+      assert(s.read.parquet(s"$out/lineage/run=$runId").inputFiles.length == 1, "lineage is one file")
+      assert(lin.map(_._1).distinct.length == lin.length, "one row per partition")
+      assert(lin.forall(r => r._7 == runId && r._8 == out))
+      val (mediaIn, mediaOk, mediaFailed, bytesIn) =
+        (lin.map(_._2).sum, lin.map(_._3).sum, lin.map(_._4).sum, lin.map(_._5).sum)
+      assert(mediaIn == refs.size, s"$runId media_in")
+      assert(mediaFailed == failedRows, s"$runId media_failed")
+      assert(mediaFailed == refs.count(garbage), s"$runId media_failed vs garbage refs")
+      assert(mediaOk + mediaFailed == mediaIn)
+      assert(bytesIn == refs.map(bytesOf).sum, s"$runId bytes_in")
+      // failure reasons: per row they sum to media_failed; here every
+      // failure is a garbage payload sniffed as pdf
+      lin.foreach(r => assert(r._9.values.sum == r._4, s"$runId partition ${r._1}: ${r._9}"))
+      assert(lin.flatMap(_._9.keys).forall(_.startsWith("pdf:")), lin.map(_._9).mkString(", "))
+      assert(lin.map(_._9.values.sum).sum == refs.count(garbage))
+      val metrics = s.read.parquet(s"$out/metrics/run=$runId")
+        .as[(Long, Option[Long], Option[Long], String)].collect().toSeq
+      assert(metrics == Seq((mediaIn, Some(mediaOk), Some(bytesIn), runId)), s"$runId metrics")
+    }
+  }
+
+  test("a run with no media spans writes media_total = 0 and null sums") {
+    implicit val s: SparkSession = spark
+    import s.implicits._
+    val docs = s.createDataset(Seq(Model.DocRow("t1", Seq(Model.InSpan("text", "only text", "", 0))))).toDF()
+    val media = s.createDataset(Corpus.build(nDocs = 2).media).toDF()
+    val out = tmpDir()
+    assert(ExtractJob.run(docs, media, out, runId = "e1").count() == 1)
+    assert(s.read.parquet(s"$out/lineage/run=e1").count() == 0)
+    val metrics = s.read.parquet(s"$out/metrics/run=e1")
+      .as[(Long, Option[Long], Option[Long], String)].collect().toSeq
+    assert(metrics == Seq((0L, None, None, "e1")))
+  }
+
+  test("lineage counts: a partition reported twice counts once; branches and reasons add") {
+    import Model.{KernelCounts, LineageCounts}
+    val a = KernelCounts(3, 2, 300, 30, Map("pdf:java.io.IOException" -> 1L))
+    val b = KernelCounts(1, 0, 10, 1, Map("pdf:java.io.IOException" -> 1L))
+    val driver = new LineageCounts
+    def task(reports: ((Int, Int), KernelCounts)*): LineageCounts = {
+      val t = driver.copyAndReset().asInstanceOf[LineageCounts]
+      reports.foreach(t.add)
+      t
+    }
+    driver.merge(task((0, 0) -> a))
+    driver.merge(task((0, 0) -> a)) // the same partition, retried
+    driver.merge(task((1, 0) -> b)) // the heavy branch's partition 0
+    driver.merge(task((0, 1) -> b))
+    assert(driver.byPartition == Map(0 -> (a + b), 1 -> b))
+    assert((a + b) == KernelCounts(4, 2, 310, 31, Map("pdf:java.io.IOException" -> 2L)))
+    assert((a + b).mediaFailed == 2)
+    val c = task((0, 0) -> b)
+    c.merge(task((0, 0) -> a)) // the last report wins
+    assert(c.value == Map((0, 0) -> a))
+  }
+
   test("resume from committed snapshot: no dupes, no gaps") {
     implicit val s: SparkSession = spark
     import s.implicits._

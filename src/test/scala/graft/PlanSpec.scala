@@ -1,7 +1,17 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{CommandResultExec, MapPartitionsExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec}
+import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -239,6 +249,64 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     val spans = ExtractJob.extract(docs, media, 4)
     val p = spans.queryExecution.executedPlan.toString
     assert(p.contains("MapPartitions"), p) // kernel runs as a single narrow stage
+  }
+
+  /** Every node of an executed plan with its ancestors (nearest first),
+    * descending into adaptive plans, query stages, reused exchanges and
+    * cached relations. */
+  private def withAncestors(p: SparkPlan, above: List[SparkPlan] = Nil): Seq[(SparkPlan, List[SparkPlan])] = {
+    val kids = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case r: ReusedExchangeExec => Seq(r.child)
+      case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
+      case c: CommandResultExec => Seq(c.commandPhysicalPlan)
+      case _ => p.children
+    }
+    (p, above) +: kids.flatMap(withAncestors(_, p :: above))
+  }
+
+  test("extraction: extracted text is never broadcast or cached; the spans join shuffles on media_ref") {
+    implicit val s: SparkSession = spark
+    import s.implicits._
+    val built = graft.testkit.Corpus.build(nDocs = 16, heavyEvery = 4)
+    val docs = s.createDataset(built.docs).toDF()
+    val media = s.createDataset(built.media).toDF()
+    val extracted = ExtractJob.extract(docs, media, 4)
+    extracted.collect() // finalize the adaptive plan
+    // run's spans write, captured from the listener bus
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = seen.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def spansWrite: Option[SparkPlan] = seen.toArray(Array.empty[SparkPlan]).find(p => withAncestors(p).exists {
+      case (DataWritingCommandExec(c: InsertIntoHadoopFsRelationCommand, _), _) =>
+        c.outputPath.toString.contains("spans_out")
+      case _ => false
+    })
+    s.listenerManager.register(listener)
+    try {
+      ExtractJob.run(docs, media, java.nio.file.Files.createTempDirectory("plan-run").toString, "p1", 4)
+      eventually(timeout(30.seconds)) {
+        assert(spansWrite.nonEmpty, s"no spans write among ${seen.toArray.map(_.getClass.getSimpleName).toSeq}")
+      }
+    } finally s.listenerManager.unregister(listener)
+    for ((name, p) <- Seq("extract" -> extracted.queryExecution.executedPlan, "run spans write" -> spansWrite.get)) {
+      val nodes = withAncestors(p)
+      val kernels = nodes.filter(_._1.isInstanceOf[MapPartitionsExec])
+      assert(kernels.nonEmpty, s"$name: no kernel MapPartitions:\n$p")
+      kernels.foreach { case (_, above) =>
+        val bad = above.filter(n => n.isInstanceOf[BroadcastExchangeExec] || n.isInstanceOf[InMemoryTableScanExec])
+        assert(bad.isEmpty, s"$name: ${bad.map(_.nodeName).mkString(", ")} above the kernel:\n$p")
+      }
+      val joinKeys = nodes.map(_._1).collect {
+        case j: SortMergeJoinExec => j.leftKeys ++ j.rightKeys
+        case j: ShuffledHashJoinExec => j.leftKeys ++ j.rightKeys
+      }
+      assert(joinKeys.exists(ks => ks.size == 2 && ks.forall(_.references.map(_.name).toSet == Set("media_ref"))),
+        s"$name: the spans join is not a shuffle join on media_ref:\n$p")
+    }
   }
 
   test("exact-substring removal: ONE corpus scan, two exchanges, gram text never shuffles") {

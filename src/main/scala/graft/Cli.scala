@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 /** Command-line front end. The default mode mirrors the reference's
   * `pdf2txt` binary (reference: main.cc — `pdf2txt <in.pdf>` prints
   * extracted text); two Spark subcommands drive the pipeline over parquet
@@ -164,7 +166,7 @@ object Cli {
             }
           } else print(graft.pdf.Pdf.pdf2txt(bytes))
         } catch {
-          case e: Exception =>
+          case NonFatal(e) =>
             System.err.println(s"$f: ${Option(e.getMessage).getOrElse(e.getClass.getSimpleName)}")
             failed += 1
         }

@@ -1,6 +1,7 @@
 package graft.functions
 
 import scala.reflect.runtime.universe.TypeTag
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.expressions.UserDefinedFunction
@@ -32,7 +33,7 @@ object PdfFunctions {
     * input instead of failing the task. */
   private val all: Seq[(String, UserDefinedFunction)] = Seq(
     "pdf2txt" -> bytesUdf(Pdf.pdf2txt),
-    "pdf2txt_safe" -> bytesUdf(b => try Pdf.pdf2txt(b) catch { case _: Exception => null }),
+    "pdf2txt_safe" -> bytesUdf(b => try Pdf.pdf2txt(b) catch { case NonFatal(_) => null }),
     "pdf2pages" -> bytesUdf(Pdf.pdf2pages),
     "html2txt" -> bytesUdf(Html.html2txt),
     "html_image_refs" -> htmlImageRefsUdf,

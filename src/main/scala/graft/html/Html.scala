@@ -1,6 +1,7 @@
 package graft.html
 
 import scala.collection.mutable.ArrayBuffer
+import scala.util.control.NonFatal
 
 /** HTML main-content extraction — the north rule's "HTML boilerplate strip
   * ... DOM heuristics" leg of the interleaved-document pipeline (the
@@ -458,7 +459,7 @@ object Html {
       if (m.find()) {
         found = true
         try cs = java.nio.charset.Charset.forName(m.group(1))
-        catch { case _: Exception => () } // bogus name → keep UTF-8
+        catch { case NonFatal(_) => () } // bogus name → keep UTF-8
       }
       i = lw.indexOf("<meta", i + 1)
     }

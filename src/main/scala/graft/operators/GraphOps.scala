@@ -128,42 +128,4 @@ object GraphOps {
     eod.unpersist(blocking = false); outDeg.unpersist(blocking = false)
     out
   }
-
-  /** PageRank, fixed iteration count, damping d: rank = (1-d)/N +
-    * d·Σ rank(in)/outdeg(in); dangling mass redistributed uniformly so
-    * ranks sum to 1 every round. Each round is one join + one aggregation
-    * on the edge list (persisted once); ranks are (node, double) — state
-    * linear in nodes, never in edges. Float-summation order makes this
-    * tolerance-comparable only, so it ships as API + spec, not as a
-    * hash-compared driver query. */
-  def pageRank(edges: DataFrame, iterations: Int = 10, damping: Double = 0.85,
-               src: String = "src", dst: String = "dst"): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val e = edges.select(col(src).as("s"), col(dst).as("d")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = e.select(col("s").as("node")).union(e.select(col("d")))
-      .distinct().persist(StorageLevel.MEMORY_AND_DISK)
-    val n = nodes.count()
-    require(n > 0, "pageRank needs a non-empty edge list")
-    val outDeg = e.groupBy(col("s")).agg(count(lit(1)).as("od"))
-    var ranks = nodes.withColumn("rank", lit(1.0 / n))
-    for (_ <- 1 to iterations) {
-      val contrib = e.join(ranks.withColumnRenamed("node", "s"), Seq("s"))
-        .join(outDeg, Seq("s"))
-        .groupBy(col("d").as("node"))
-        .agg(sum(col("rank") / col("od")).as("c"))
-      // dangling nodes (no out-edges) leak their rank: collect the leaked
-      // mass (one scalar) and spread it uniformly to keep Σrank = 1
-      val linkedMass = ranks.join(outDeg, ranks("node") === outDeg("s"), "left_semi")
-        .agg(sum(col("rank"))).head().getDouble(0)
-      val dangling = 1.0 - linkedMass
-      ranks = nodes.join(contrib, Seq("node"), "left")
-        .select(col("node"),
-          (lit((1 - damping) / n) + lit(damping) *
-            (coalesce(col("c"), lit(0.0)) + lit(dangling / n))).as("rank"))
-        .localCheckpoint(true)
-    }
-    e.unpersist(blocking = false); nodes.unpersist(blocking = false)
-    ranks
-  }
 }

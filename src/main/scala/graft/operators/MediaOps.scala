@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Multimodal-column plumbing: image/audio/video ride as opaque `binary`
   * columns with typed metadata. Images (PNG/JPEG/BMP/GIF) and WAV audio
@@ -86,7 +87,7 @@ object MediaOps {
     * contract's no-abort rule). */
   def dHash(bytes: Array[Byte]): String = {
     val img = try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-      catch { case _: Exception => null }
+      catch { case NonFatal(_) => null }
     if (img == null) return null
     val w = img.getWidth
     val h = img.getHeight
@@ -147,7 +148,7 @@ object MediaOps {
   def wavHash(bytes: Array[Byte]): String = {
     val in = try javax.sound.sampled.AudioSystem.getAudioInputStream(
         new java.io.ByteArrayInputStream(bytes))
-      catch { case _: Exception => return null }
+      catch { case NonFatal(_) => return null }
     try {
       val fmt = in.getFormat
       val data = in.readAllBytes()
@@ -171,7 +172,7 @@ object MediaOps {
       i = 0
       while (i < 64) { sb.append(if (energy(i) < energy(i + 1)) '1' else '0'); i += 1 }
       sb.toString
-    } catch { case _: Exception => null } finally in.close()
+    } catch { case NonFatal(_) => null } finally in.close()
   }
 
   /** Near-duplicate AUDIO pairs by perceptual energy-profile hash — the
@@ -230,23 +231,14 @@ object MediaOps {
       } else if (kind == "audio/wav" || kind == "audio/x-wav") {
         return decodeWav(bytes, dim)
       }
-    } catch { case _: Exception => } // undecodable payload -> stub fallback
+    } catch { case NonFatal(_) => } // undecodable payload -> stub fallback
     decodeStub(kind, bytes, dim)
   }
 
-  /** Feature extraction over the media dimension — same hybrid skew
-    * routing as ExtractJob.extractMedia: typical payloads decode in the
-    * scan stage (narrow, bytes never shuffle); only the oversized tail
-    * (size_bucket > `heavyBucket`, i.e. > 2^heavyBucket bytes) pays a
-    * salted repartition to spread stragglers.
-    *
-    * Routing is on the `size_bucket` COLUMN (pushable — parquet row-group
-    * min/max stats prune the heavy branch to almost nothing), NOT on
-    * octet_length(bytes), which would force BOTH branches to re-read every
-    * payload. Tables without the column get it derived here from
-    * octet_length as a fallback, but that predicate cannot push to the
-    * scan — write size_bucket at ingest for large tables (the corpus
-    * tables do; see ExtractJob). */
+  /** Feature extraction over the media dimension, routed by size like
+    * ExtractJob.extractMedia ([[graft.Model.MediaRow.routeBySize]]):
+    * typical payloads decode in the scan stage (narrow, bytes never
+    * shuffle); only the oversized tail pays a salted repartition. */
   def featurize(media: DataFrame, dim: Int = 16, numPartitions: Int = 0,
                 heavyBucket: Int = 22 /* 4 MB */)(implicit spark: SparkSession): Dataset[MediaFeatures] = {
     import spark.implicits._
@@ -256,11 +248,11 @@ object MediaOps {
     }
   }
 
-  /** Shared hybrid-skew-routed per-media pass: typical payloads process in
-    * the scan stage (narrow, bytes never shuffle); only the oversized tail
-    * pays a salted repartition. NULL buckets (schema-evolved files
-    * predating the column) route small — a row must never be silently
-    * dropped by the branch split. */
+  /** A per-media pass routed by size ([[graft.Model.MediaRow.routeBySize]]).
+    * Tables without the `size_bucket` column get it derived here from
+    * octet_length as a fallback, but that predicate cannot push to the
+    * scan — write size_bucket at ingest for large tables (the corpus
+    * tables do; see ExtractJob). */
   private def routedFlatMap[T: org.apache.spark.sql.Encoder](
       media: DataFrame, numPartitions: Int, heavyBucket: Int)(
       f: MediaMeta => Iterator[T])(implicit spark: SparkSession): Dataset[T] = {
@@ -270,14 +262,10 @@ object MediaOps {
       if (media.columns.contains("size_bucket")) media
       else media.withColumn("size_bucket", graft.Model.MediaRow.sizeBucket(octet_length(col("bytes"))))
     val work = withBucket.select(col("media_ref"), col("kind"), col("bytes"), col("size_bucket"))
-    def run(df: DataFrame): Dataset[T] =
+    graft.Model.MediaRow.routeBySize(work, parts, heavyBucket) { (df, _) =>
       df.select(col("media_ref"), col("kind"), col("bytes")).as[MediaMeta]
         .mapPartitions(_.flatMap(f)) // per-partition reused scratch would live here for a real codec
-    val small = work.where(col("size_bucket") <= heavyBucket || col("size_bucket").isNull)
-    val heavy = work.where(col("size_bucket") > heavyBucket)
-      .withColumn("salt", pmod(xxhash64(col("media_ref")), lit(parts)))
-      .repartition(parts, col("size_bucket"), col("salt"))
-    run(small).union(run(heavy))
+    }
   }
 
   case class ResizedImage(media_ref: String, in_w: Int, in_h: Int,
@@ -324,7 +312,7 @@ object MediaOps {
       try {
         val r = resizeImage(m.bytes, maxW, maxH)
         if (r == null) Iterator.empty else Iterator.single(r.copy(media_ref = m.media_ref))
-      } catch { case _: Exception => Iterator.empty }
+      } catch { case NonFatal(_) => Iterator.empty }
     }
   }
 
@@ -398,7 +386,7 @@ object MediaOps {
       try {
         val r = gifFrames(bytes, everyNth, maxFrames)
         if (r != null) return r
-      } catch { case _: Exception => } // corrupt GIF → stub fallback
+      } catch { case NonFatal(_) => } // corrupt GIF → stub fallback
     }
     stubFrames(bytes, everyNth, maxFrames)
   }

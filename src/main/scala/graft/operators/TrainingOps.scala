@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.expressions.NativeFunctions
 
@@ -144,47 +145,64 @@ object TrainingOps {
     * signature table serves every near-dup consumer without re-scanning
     * the corpus. */
   def minhashLshPairsFromSig(mh: DataFrame, numHashes: Int = 16, bands: Int = 4,
-                             maxBucket: Int = 64): DataFrame = {
+                             maxBucket: Int = 64): DataFrame =
+    cappedBucketPairs(lshBands(mh, numHashes, bands), "minhash", maxBucket, "matches",
+      sigMatchesSql("a.minhash", "b.minhash"))(m => (m / numHashes).as("est_jaccard"))
+      .groupBy(col("doc_a"), col("doc_b")).agg(max(col("est_jaccard")).as("est_jaccard"))
+
+  /** SQL count of the positions where two minhash signatures agree. */
+  private def sigMatchesSql(a: String, b: String): String =
+    s"aggregate(zip_with($a, $b, (x, y) -> if(x = y, 1, 0)), 0, (acc, v) -> acc + v)"
+
+  /** The LSH band buckets of a signature frame (doc_id, minhash): one row
+    * per (doc, band) with `bucket` = xxhash64 of the band's `numHashes /
+    * bands` signature values and the band index. The band index comes
+    * from a LITERAL sequence, not an array derived from the signature:
+    * Generate plants an implicit `size(input) > 0` filter which Catalyst
+    * pushes down and re-evaluates per row if the input is a computed
+    * array (measured 30× slowdown before the typed barrier). */
+  private def lshBands(mh: DataFrame, numHashes: Int, bands: Int): DataFrame = {
     val rows = numHashes / bands
-    // explode a LITERAL band-index sequence, not an array derived from the
-    // signature: Generate plants an implicit `size(input) > 0` filter which
-    // Catalyst pushes down and re-evaluates per row if the input is a
-    // computed array (measured 30× slowdown before the typed barrier).
-    val banded = mh
-      .select(col("doc_id"), col("minhash"),
-        explode(sequence(lit(0), lit(bands - 1))).as("band"))
+    mh.select(col("doc_id"), col("minhash"), explode(sequence(lit(0), lit(bands - 1))).as("band"))
       .select(col("doc_id"), col("minhash"), col("band"),
         xxhash64(concat_ws(",",
           transform(slice(col("minhash"), col("band") * rows + 1, lit(rows)),
             x => x.cast("string"))), col("band")).as("bucket"))
-    // Skew safety: a boilerplate mega-bucket must never hit an unbounded
-    // aggregation buffer. Bucket size comes from a window COUNT over
-    // (band, bucket) — same keys as the collect_list aggregation right
-    // after it, so Catalyst reuses one exchange: ONE corpus scan, ONE
-    // signature pass, ONE shuffle (the earlier count+semi-join formulation
-    // planned the whole scan→minhash→banding pipeline TWICE). WindowExec
-    // buffers each bucket in a spillable array, so a mega-bucket spills to
-    // disk instead of OOMing, and the filter drops it before collect_list
-    // ever sees it — the agg buffer stays bounded by maxBucket.
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("band"), col("bucket"))
-    val buckets = banded
+  }
+
+  /** Candidate pairs within the (band, bucket) groups of `banded(doc_id,
+    * <sig>, band, bucket)`: each member pair of a bucket gets the SQL
+    * `pairSql` over the two members `a` and `b` as struct field `field`,
+    * and comes out as (doc_a, doc_b, `score(field)`) in canonical order
+    * (collect_list member order is nondeterministic, so least/greatest
+    * keeps one pair from surfacing both ways). A pair sharing several
+    * buckets comes out once per bucket.
+    *
+    * Skew safety: a boilerplate mega-bucket must never hit an unbounded
+    * aggregation buffer. Bucket size comes from a window COUNT over
+    * (band, bucket) — same keys as the collect_list aggregation right
+    * after it, so Catalyst reuses one exchange: ONE corpus scan, ONE
+    * signature pass, ONE shuffle (the earlier count+semi-join formulation
+    * planned the whole scan→minhash→banding pipeline TWICE). WindowExec
+    * buffers each bucket in a spillable array, so a mega-bucket spills to
+    * disk instead of OOMing, and the filter drops it before collect_list
+    * ever sees it — the agg buffer and the pair expansion stay bounded by
+    * `maxBucket`. */
+  private def cappedBucketPairs(banded: DataFrame, sig: String, maxBucket: Int,
+                                field: String, pairSql: String)(score: Column => Column): DataFrame = {
+    val w = Window.partitionBy(col("band"), col("bucket"))
+    banded
       .withColumn("bn", count(lit(1)).over(w))
       .where(col("bn") > 1 && col("bn") <= maxBucket)
       .groupBy(col("band"), col("bucket"))
-      .agg(collect_list(struct(col("doc_id"), col("minhash"))).as("members"))
-    // pair expansion inside a bucket (bounded by maxBucket)
-    val pairs = buckets.select(explode(expr(
-      """flatten(transform(members, (a, i) ->
-        |  transform(slice(members, i + 2, size(members)), b ->
-        |    struct(a.doc_id as doc_a, b.doc_id as doc_b,
-        |           aggregate(zip_with(a.minhash, b.minhash, (x, y) -> if(x = y, 1, 0)),
-        |                     0, (acc, v) -> acc + v) as matches))))""".stripMargin)).as("p"))
-      // canonical order: collect_list member order is nondeterministic, so
-      // (a,b) must be normalized or the same pair can surface both ways
+      .agg(collect_list(struct(col("doc_id"), col(sig))).as("members"))
+      .select(explode(expr(
+        s"""flatten(transform(members, (a, i) ->
+          |  transform(slice(members, i + 2, size(members)), b ->
+          |    struct(a.doc_id as doc_a, b.doc_id as doc_b, $pairSql as $field))))""".stripMargin)).as("p"))
       .select(least(col("p.doc_a"), col("p.doc_b")).as("doc_a"),
         greatest(col("p.doc_a"), col("p.doc_b")).as("doc_b"),
-        (col("p.matches") / numHashes).as("est_jaccard"))
-    pairs.groupBy(col("doc_a"), col("doc_b")).agg(max(col("est_jaccard")).as("est_jaccard"))
+        score(col(s"p.$field")))
   }
 
   /** SimHash (64-bit): per-token hash bit votes. Token hash = MD5 (a hash
@@ -261,23 +279,11 @@ object TrainingOps {
       .select(col(idCol).as("doc_id"), col("simhash"),
         explode(sequence(lit(0), lit(3))).as("band"))
       .withColumn("bucket", expr("substring(simhash, band * 16 + 1, 16)"))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("band"), col("bucket"))
-    val buckets = banded
-      .withColumn("bn", count(lit(1)).over(w))
-      .where(col("bn") > 1 && col("bn") <= maxBucket)
-      .groupBy(col("band"), col("bucket"))
-      .agg(collect_list(struct(col("doc_id"), col("simhash"))).as("members"))
-    val pairs = buckets.select(explode(expr(
-      """flatten(transform(members, (a, i) ->
-        |  transform(slice(members, i + 2, size(members)), b ->
-        |    struct(a.doc_id as doc_a, b.doc_id as doc_b,
-        |           graft_hamming(a.simhash, b.simhash) as hd))))""".stripMargin)).as("p"))
-      .select(least(col("p.doc_a"), col("p.doc_b")).as("doc_a"),
-        greatest(col("p.doc_a"), col("p.doc_b")).as("doc_b"),
-        col("p.hd").as("hamming"))
+    cappedBucketPairs(banded, "simhash", maxBucket, "hd", "graft_hamming(a.simhash, b.simhash)")(
+      _.as("hamming"))
       .where(col("hamming") <= maxHamming)
-    // a pair sharing several bands surfaces once per band — dedup
-    pairs.groupBy(col("doc_a"), col("doc_b")).agg(min(col("hamming")).as("hamming"))
+      // a pair sharing several bands surfaces once per band — dedup
+      .groupBy(col("doc_a"), col("doc_b")).agg(min(col("hamming")).as("hamming"))
   }
 
   /** Exact n-gram Jaccard verification over LSH candidate pairs: the
@@ -331,8 +337,15 @@ object TrainingOps {
     val scored = embeddings.select(col("vec_id"), asDouble(col("embedding")).as("embedding")).crossJoin(q)
       .where(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"), fusedCosine(embeddings, "q_emb", "embedding").as("cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id"))
+    topK(scored, col("cos").desc, k)
+  }
+
+  /** The `k` best rows of each query_id by `order`, vec_id breaking ties,
+    * numbered 1..k in a long `rank` column. The `rank <= k` filter on the
+    * row_number gives WindowGroupLimit top-k on both sides of the
+    * exchange. */
+  private def topK(scored: DataFrame, order: Column, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("query_id")).orderBy(order, col("vec_id"))
     scored.withColumn("rank", row_number().over(w).cast("long")).where(col("rank") <= k)
   }
 
@@ -370,14 +383,12 @@ object TrainingOps {
     * (|dot| <= dim*127^2, far inside long) under one sqrt and one
     * divide, bitwise-reproducible in any engine and directly comparable
     * to the float cosine it approximates. Zero vectors score -1
-    * (cosine undefined; ranked last). Queries broadcast; the
-    * `rank <= k` filter on the row_number gives WindowGroupLimit top-k
-    * on both sides of the exchange. The dots run through the native
-    * `graft_int_dot` kernel (one fused JVM loop per pair, codegen'd —
-    * the r5 doc flagged the composed zip_with/aggregate fold as the
-    * drop-in upgrade once the quantized sweep showed in a profile, and
-    * it did: the per-(row, query) interpreted fold was the query's hot
-    * loop). Exact integer sums are order-independent, so the scores are
+    * (cosine undefined; ranked last). Queries broadcast; [[topK]] ranks.
+    * The dots run through the native `graft_int_dot` kernel (one fused
+    * JVM loop per pair, codegen'd — the r5 doc flagged the composed
+    * zip_with/aggregate fold as the drop-in upgrade once the quantized
+    * sweep showed in a profile, and it did: the per-(row, query)
+    * interpreted fold was the query's hot loop). Exact integer sums are order-independent, so the scores are
     * bitwise unchanged. */
   def knnInt8(embeddings: DataFrame, queries: DataFrame, k: Int = 10): DataFrame = {
     def selfDot(v: Column): Column = NativeFunctions.call("graft_int_dot", v, v)
@@ -396,9 +407,7 @@ object TrainingOps {
         when(col("self_q") === 0L || col("q_self") === 0L, lit(-1.0d))
           .otherwise(col("dot_q").cast("double") /
             sqrt((col("self_q") * col("q_self")).cast("double"))).as("score"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id")).orderBy(col("score").desc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long")).where(col("rank") <= k)
+    topK(scored, col("score").desc, k)
   }
 
   /** IEEE-parity squared distance between two array<double> columns: a
@@ -472,18 +481,16 @@ object TrainingOps {
     * never a dim-length loop. The approximate distance folds the LUT
     * entries in subspace order (left-assoc adds), so scores are bitwise
     * cross-engine like [[knnInt8]]. Ranking ascends by distance, vec_id
-    * tie-break; `rank <= k` keeps the WindowGroupLimit shape. */
+    * tie-break ([[topK]]). */
   def knnPq(embeddings: DataFrame, queries: DataFrame,
             codebook: Array[Array[Array[Double]]], k: Int = 10): DataFrame = {
     val enc = pqEncode(embeddings, codebook)
     val qd = transform(col("embedding"), x => x.cast("double"))
     val q = broadcast(queries.select(col("vec_id").as("query_id"),
       pqLutCol(codebook, qd).as("lut")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id")).orderBy(col("adist").asc, col("vec_id"))
-    enc.crossJoin(q).where(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), pqAdistCol(codebook.length).as("adist"))
-      .withColumn("rank", row_number().over(w).cast("long")).where(col("rank") <= k)
+    topK(enc.crossJoin(q).where(col("vec_id") =!= col("query_id"))
+      .select(col("query_id"), col("vec_id"), pqAdistCol(codebook.length).as("adist")),
+      col("adist").asc, k)
   }
 
   /** IVF routing + PQ scoring — the standard billion-scale ANN layout
@@ -502,32 +509,33 @@ object TrainingOps {
                nCells: Int = 16, nProbe: Int = 4,
                centroids0: Array[Array[Double]] = null): DataFrame = {
     val centroids = if (centroids0 != null) centroids0 else ivfCentroids(embeddings, nCells)
-    def cellDist(emb: Column, c: Array[Double]): Column =
-      aggregate(zip_with(emb, array(c.map(lit): _*), (x, y) => (x - y) * (x - y)),
-        lit(0.0d), (acc, v) => acc + v)
-    // query-side top-n probe routing (tiny frame) stays composed; the
-    // corpus-side single-cell assignment uses the native argmin kernel
-    // (n=1 ≡ array_sort(struct(d, cell))[0] — same distances, same ties)
-    def nearestCells(emb: Column, n: Int): Column = {
-      val scored = array(centroids.zipWithIndex.map { case (c, i) =>
-        struct(cellDist(emb, c).as("d"), lit(i).as("cell"))
-      }: _*)
-      slice(transform(array_sort(scored), s => s.getField("cell")), lit(1), lit(n))
-    }
     val e = embeddings.select(col("vec_id"), asDouble(col("embedding")).as("embedding"))
-      .select(col("vec_id"),
-        element_at(argminCodesCol(col("embedding"), centroids.flatten,
-          1, centroids.length), 1).as("cell"),
+      .select(col("vec_id"), nearestCell(centroids, col("embedding")).as("cell"),
         pqCodesCol(codebook, col("embedding")).as("codes"))
     val q = broadcast(queries
       .select(col("vec_id").as("query_id"), asDouble(col("embedding")).as("q_emb"))
-      .withColumn("cell", explode(nearestCells(col("q_emb"), nProbe)))
+      .withColumn("cell", explode(nearestCells(centroids, col("q_emb"), nProbe)))
       .select(col("query_id"), col("cell"), pqLutCol(codebook, col("q_emb")).as("lut")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id")).orderBy(col("adist").asc, col("vec_id"))
-    e.join(q, Seq("cell")).where(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), pqAdistCol(codebook.length).as("adist"))
-      .withColumn("rank", row_number().over(w).cast("long")).where(col("rank") <= k)
+    topK(e.join(q, Seq("cell")).where(col("vec_id") =!= col("query_id"))
+      .select(col("query_id"), col("vec_id"), pqAdistCol(codebook.length).as("adist")),
+      col("adist").asc, k)
+  }
+
+  /** The IVF cell of each corpus vector: its nearest centroid, through the
+    * native argmin kernel (≡ the first of [[nearestCells]] — same
+    * distances, same ties). */
+  private def nearestCell(centroids: Array[Array[Double]], emb: Column): Column =
+    element_at(argminCodesCol(emb, centroids.flatten, 1, centroids.length), 1)
+
+  /** The `n` cells a query probes: centroid indices by ascending squared
+    * distance, lower index on ties (struct order). Composed, since it runs
+    * on the tiny query frame only; the centroids ride the plan as
+    * literals. */
+  private def nearestCells(centroids: Array[Array[Double]], emb: Column, n: Int): Column = {
+    val scored = array(centroids.zipWithIndex.map { case (c, i) =>
+      struct(sqDistCol(emb, array(c.map(lit): _*)).as("d"), lit(i).as("cell"))
+    }: _*)
+    slice(transform(array_sort(scored), s => s.getField("cell")), lit(1), lit(n))
   }
 
   /** Deterministic random hyperplanes for sign-LSH (seeded, no RNG state).
@@ -595,9 +603,7 @@ object TrainingOps {
       .where(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"), fusedCosine(embeddings, "q_emb", "embedding").as("cos"))
       .distinct() // same pair from several tables carries an identical cos
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long")).where(col("rank") <= k)
+    topK(scored, col("cos").desc, k)
   }
 
   /** Coarse-quantizer centroids for IVF. Two modes:
@@ -654,29 +660,14 @@ object TrainingOps {
              nCells: Int = 16, nProbe: Int = 4,
              centroids0: Array[Array[Double]] = null): DataFrame = {
     val centroids = if (centroids0 != null) centroids0 else ivfCentroids(embeddings, nCells)
-    // nearest-cell assignment as a pure expression over broadcast centroid literals
-    def cellDist(emb: Column, c: Array[Double]): Column =
-      aggregate(zip_with(emb, array(c.map(lit): _*), (x, y) => (x - y) * (x - y)),
-        lit(0.0d), (acc, v) => acc + v)
-    def nearestCells(emb: Column, n: Int): Column = {
-      val scored = array(centroids.zipWithIndex.map { case (c, i) =>
-        struct(cellDist(emb, c).as("d"), lit(i).as("cell"))
-      }: _*)
-      slice(transform(array_sort(scored), s => s.getField("cell")), lit(1), lit(n))
-    }
     val e = embeddings.select(col("vec_id"), asDouble(col("embedding")).as("embedding"))
-      // corpus-side single-cell routing via the native argmin kernel
-      // (n=1 ≡ array_sort(struct(d, cell))[0] — same distances, same ties)
-      .withColumn("cell", element_at(
-        argminCodesCol(col("embedding"), centroids.flatten, 1, centroids.length), 1))
+      .withColumn("cell", nearestCell(centroids, col("embedding")))
     val q = broadcast(queries.select(col("vec_id").as("query_id"), asDouble(col("embedding")).as("q_emb"))
-      .withColumn("cell", explode(nearestCells(col("q_emb"), nProbe))))
+      .withColumn("cell", explode(nearestCells(centroids, col("q_emb"), nProbe))))
     val scored = e.join(q, Seq("cell"))
       .where(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"), fusedCosine(embeddings, "q_emb", "embedding").as("cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long")).where(col("rank") <= k)
+    topK(scored, col("cos").desc, k)
   }
 
   /** Embedding near-duplicate pairs (semantic dedup): bucket join + cosine
@@ -695,7 +686,7 @@ object TrainingOps {
     // branch + both join inputs, none exchange-shared when AQE picks a
     // broadcast semi-join). Mega-buckets spill in WindowExec and are
     // filtered before the join.
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("bucket"))
+    val w = Window.partitionBy(col("bucket"))
     val capped = e.withColumn("bn", count(lit(1)).over(w))
       .where(col("bn") > 1 && col("bn") <= maxBucket)
     val a = capped.select(col("bucket"), col("vec_id").as("id_a"), col("embedding").as("emb_a"))
@@ -808,8 +799,13 @@ object TrainingOps {
     * 25%, "19999999" = 10%. */
   def deterministicSample(docs: DataFrame, keyCol: String, rateHex: String,
                           salt: String = "s42"): DataFrame =
-    docs.where(substring(md5(concat(col(keyCol).cast("string"), lit(":" + salt)).cast("binary")), 1, 8)
-      < lit(rateHex))
+    docs.where(keyedDraw(col(keyCol), salt) < lit(rateHex))
+
+  /** A row's content-addressed draw: the first 8 lowercase hex digits of
+    * md5(key ∥ ":" ∥ salt). The one random source of every deterministic
+    * sampler, split and mix here. */
+  private def keyedDraw(key: Column, salt: String): Column =
+    substring(md5(concat(key.cast("string"), lit(":" + salt)).cast("binary")), 1, 8)
 
   /** Deterministic train/val/test split: the same content-addressed MD5
     * as [[deterministicSample]] assigns each row exactly ONE split by
@@ -829,7 +825,7 @@ object TrainingOps {
     // uppercase or wrong-length bound would silently mis-assign splits
     require(bounds.forall(_._1.matches("[0-9a-f]{8}")),
       "each bound must be exactly 8 lowercase hex digits")
-    val h = substring(md5(concat(col(keyCol).cast("string"), lit(":" + salt)).cast("binary")), 1, 8)
+    val h = keyedDraw(col(keyCol), salt)
     val split = bounds.foldRight(lit(lastName)) { case ((hex, name), acc) =>
       when(h < lit(hex), lit(name)).otherwise(acc)
     }
@@ -887,7 +883,7 @@ object TrainingOps {
       .where(col("term") =!= "")
     val tf = terms.groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
     val df = terms.groupBy(col("term")).agg(countDistinct(col("doc_id")).as("df"))
-    val w = org.apache.spark.sql.expressions.Window
+    val w = Window
       .partitionBy(col("doc_id")).orderBy(col("score").desc, col("term"))
     tf.join(df, Seq("term"))
       .withColumn("score", col("tf") * log(lit(n.toDouble) / col("df")))
@@ -921,8 +917,11 @@ object TrainingOps {
 
   /** Whitespace token count, pure expressions (matches the ANSI oracle). */
   def tokenCount(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"),
-      (length(col("text")) - length(regexp_replace(col("text"), " ", "")) + 1).cast("long").as("n_tokens"))
+    docs.select(col("doc_id"), spaceTokens.as("n_tokens"))
+
+  /** Single-space token count of `text`: spaces + 1. */
+  private def spaceTokens: Column =
+    (length(col("text")) - length(regexp_replace(col("text"), " ", "")) + 1).cast("long")
 
   /** BPE-ish regex tokenizer count: letter runs / digit runs / single
     * punctuation, the GPT-2-style pre-tokenization shape. */
@@ -932,15 +931,13 @@ object TrainingOps {
         .cast("long").as("n_bpe_tokens"))
 
   /** Quality signals: lengths, token counts, bucket label. */
-  def quality(docs: DataFrame): DataFrame = {
-    val nTokens = (length(col("text")) - length(regexp_replace(col("text"), " ", "")) + 1).cast("long")
+  def quality(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
       length(col("text")).cast("long").as("n_chars"),
-      nTokens.as("n_tokens"),
+      spaceTokens.as("n_tokens"),
       when(length(col("text")) < 50, lit("short"))
-        .when(nTokens > 20, lit("long"))
+        .when(spaceTokens > 20, lit("long"))
         .otherwise(lit("ok")).as("quality_bucket"))
-  }
 
   /** Interleaved-document assembly for multimodal training: order the
     * spans of each document, substitute a per-kind sentinel token
@@ -1299,7 +1296,7 @@ object TrainingOps {
   def clusterRepresentatives(docs: DataFrame, clusters: DataFrame): DataFrame = {
     val sized = clusters.join(
       docs.select(col("doc_id"), length(col("text")).cast("long").as("n_chars")), Seq("doc_id"))
-    val w = org.apache.spark.sql.expressions.Window
+    val w = Window
       .partitionBy(col("cluster_id")).orderBy(col("n_chars").desc, col("doc_id"))
     sized.withColumn("rn", row_number().over(w)).where(col("rn") === 1)
       .select(col("cluster_id"), col("doc_id").as("rep_id"), col("n_chars"))
@@ -1316,8 +1313,7 @@ object TrainingOps {
     val rate = ratesHex.foldRight(lit(defaultRateHex): Column) { case ((k, v), acc) =>
       when(col(strataCol) === k, lit(v)).otherwise(acc)
     }
-    docs.where(
-      substring(md5(concat(col("doc_id").cast("string"), lit(":" + salt)).cast("binary")), 1, 8) < rate)
+    docs.where(keyedDraw(col("doc_id"), salt) < rate)
   }
 
   /** Word-diversity quality signal (Gopher-style repetition filter input):
@@ -1531,13 +1527,18 @@ object TrainingOps {
     * per-key sequential scans — a global ORDER BY (single reducer) never
     * appears in the plan. Deterministic: (source, doc_id) is a total order
     * per stratum. */
-  def tokenBudgetChunks(docs: DataFrame, budget: Long = 2048): DataFrame = {
-    val nTokens = (length(col("text")) - length(regexp_replace(col("text"), " ", "")) + 1).cast("long")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("source")).orderBy(col("doc_id"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    docs.select(col("doc_id"), col("source"), nTokens.as("n_tokens"))
-      .withColumn("chunk_id", floor(coalesce(sum(col("n_tokens")).over(w), lit(0L)) / budget))
+  def tokenBudgetChunks(docs: DataFrame, budget: Long = 2048): DataFrame =
+    docs.select(col("doc_id"), col("source"), spaceTokens.as("n_tokens"))
+      .withColumn("chunk_id", prefixBin("n_tokens", "source", "doc_id", budget))
+
+  /** floor(sum of `size` over the rows BEFORE this one, in `order` within
+    * `part`, / target): consecutive rows fill bins of about `target`, a
+    * bin closing after the row that crosses it. Exact integer prefix sum,
+    * one exchange on `part`, sequential per key. */
+  private def prefixBin(size: String, part: String, order: String, target: Long): Column = {
+    val w = Window.partitionBy(col(part)).orderBy(col(order))
+      .rowsBetween(Window.unboundedPreceding, -1)
+    floor(coalesce(sum(col(size)).over(w), lit(0L)) / target)
   }
 
   /** Cross-snapshot NEAR dedup: drop every incoming document whose
@@ -1558,14 +1559,9 @@ object TrainingOps {
   def dedupNearVsPrior(docs: DataFrame, prior: DataFrame, threshold: Double = 0.9,
                        numHashes: Int = 16, bands: Int = 4, shingleK: Int = 3,
                        maxBucket: Int = 64): DataFrame = {
-    val rows = numHashes / bands
-    def banded(sig: DataFrame, sigName: String): DataFrame = sig
-      .select(col("doc_id"), col("minhash"), explode(sequence(lit(0), lit(bands - 1))).as("band"))
-      .select(col("doc_id"), col("minhash").as(sigName), col("band"),
-        xxhash64(concat_ws(",",
-          transform(slice(col("minhash"), col("band") * rows + 1, lit(rows)),
-            x => x.cast("string"))), col("band")).as("bucket"))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("band"), col("bucket"))
+    def banded(sig: DataFrame, sigName: String): DataFrame =
+      lshBands(sig, numHashes, bands).withColumnRenamed("minhash", sigName)
+    val w = Window.partitionBy(col("band"), col("bucket"))
     val priorSide = banded(minhash(prior, numHashes, shingleK), "sig_b")
       .withColumn("bn", count(lit(1)).over(w))
       .where(col("bn") <= maxBucket)
@@ -1573,8 +1569,7 @@ object TrainingOps {
     val newSide = banded(minhash(docs, numHashes, shingleK), "sig_a")
     val minMatches = math.ceil(threshold * numHashes).toInt
     val dup = newSide.join(priorSide, Seq("band", "bucket"))
-      .where(expr("aggregate(zip_with(sig_a, sig_b, (x, y) -> if(x = y, 1, 0)), 0, (acc, v) -> acc + v)")
-        >= lit(minMatches))
+      .where(expr(sigMatchesSql("sig_a", "sig_b")) >= lit(minMatches))
       .select(col("doc_id")).distinct()
     docs.join(dup, Seq("doc_id"), "left_anti")
   }
@@ -1598,7 +1593,7 @@ object TrainingOps {
     val grams = docs
       .select(col("doc_id"), explode(array_distinct(shingles(col("text"), n))).as("g"))
       .select(col("doc_id"), xxhash64(col("g")).as("gh"))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("gh"))
+    val w = Window.partitionBy(col("gh"))
     grams.withColumn("df", count(lit(1)).over(w))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_grams"),
@@ -1644,8 +1639,7 @@ object TrainingOps {
   def weightedSample(docs: DataFrame, weight: Column, maxWeight: Long,
                      salt: String = "w42"): DataFrame = {
     require(maxWeight > 0 && maxWeight < Int.MaxValue, "maxWeight must be in (0, 2^31)")
-    val u32 = conv(substring(md5(concat(col("doc_id").cast("string"), lit(":" + salt))
-      .cast("binary")), 1, 8), 16, 10).cast("long")
+    val u32 = conv(keyedDraw(col("doc_id"), salt), 16, 10).cast("long")
     docs.where(u32 * lit(maxWeight) < least(weight.cast("long"), lit(maxWeight)) * lit(4294967296L))
   }
 
@@ -1662,8 +1656,7 @@ object TrainingOps {
                  salt: String = "mix"): DataFrame = {
     fractions.foreach { case (s, (n, d)) =>
       require(n >= 0 && d > 0 && n <= d && d < Int.MaxValue, s"bad fraction for $s: $n/$d") }
-    val u32 = conv(substring(md5(concat(col("doc_id").cast("string"), lit(":" + salt))
-      .cast("binary")), 1, 8), 16, 10).cast("long")
+    val u32 = conv(keyedDraw(col("doc_id"), salt), 16, 10).cast("long")
     // deterministic CASE order (sorted) so the plan is stable run-to-run
     val sorted = fractions.toSeq.sortBy(_._1)
     val num = sorted.foldLeft(lit(0L)) { case (acc, (s, (n, _))) =>
@@ -1703,40 +1696,50 @@ object TrainingOps {
     * Exact modulo xxhash64 collisions (the oracle compares gram strings). */
   def removeDupNgramSpans(docs: DataFrame, n: Int = 13, minCount: Long = 2): DataFrame = {
     require(n >= 2, s"gram width must be >= 2, got $n")
-    val ws = docs.select(col("doc_id"), split(col("text"), " ").as("ws"))
-    val toks = ws.select(col("doc_id"),
-        posexplode(transform(col("ws"), (w, i) => struct(
-          w.as("w"),
-          when(i <= size(col("ws")) - n,
-            xxhash64(concat_ws(" ", slice(col("ws"), i + 1, lit(n))))).as("gh"))))
-          .as(Seq("pos", "t")))
+    val toks = gramTokens(docs, n)
       .select(col("doc_id"), col("pos"), col("t.w").as("w"),
         col("t.gh").isNotNull.as("has_gram"),
         coalesce(col("t.gh"),
           xxhash64(concat(col("doc_id").cast("string"), lit(":tail:"),
             col("pos").cast("string")))).as("gh"))
-    val freqW = org.apache.spark.sql.expressions.Window.partitionBy(col("gh"))
-    val flagged = toks
-      .withColumn("dup_start", col("has_gram") && count(lit(1)).over(freqW) >= minCount)
-    // a token at pos is covered iff the latest duplicated-window start
-    // at-or-before it is within n-1 positions — one running max, no
-    // position-range self-join
-    val coverW = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("doc_id")).orderBy(col("pos"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
-    val covered = flagged
+    val freqW = Window.partitionBy(col("gh"))
+    cutCovered(toks
+      .withColumn("dup_start", col("has_gram") && count(lit(1)).over(freqW) >= minCount), n)
+  }
+
+  /** One row per single-space token of each document: (doc_id, pos, t)
+    * with t = struct(w: the token, gh: xxhash64 of the `n`-token window
+    * starting at it, NULL where no full window starts). */
+  private def gramTokens(docs: DataFrame, n: Int): DataFrame = {
+    val ws = docs.select(col("doc_id"), split(col("text"), " ").as("ws"))
+    ws.select(col("doc_id"),
+      posexplode(transform(col("ws"), (w, i) => struct(
+        w.as("w"),
+        when(i <= size(col("ws")) - n,
+          xxhash64(concat_ws(" ", slice(col("ws"), i + 1, lit(n))))).as("gh"))))
+        .as(Seq("pos", "t")))
+  }
+
+  /** The gram-cover cut over token rows (doc_id, pos, w, dup_start): a
+    * token is covered iff the latest flagged window start at-or-before
+    * it is within n-1 positions — one running max, no position-range
+    * self-join — and each document comes back as its uncovered tokens in
+    * order plus its token accounting. split("", " ") = [""], so every doc
+    * keeps >= 1 token row and the aggregation alone returns every
+    * document (no outer join needed). */
+  private def cutCovered(flagged: DataFrame, n: Int): DataFrame = {
+    val coverW = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    flagged
       .withColumn("last_start", max(when(col("dup_start"), col("pos"))).over(coverW))
       .withColumn("covered",
         col("last_start").isNotNull && col("last_start") >= col("pos") - (n - 1))
-    // split("", " ") = [""] — every doc keeps >= 1 token row, so the
-    // aggregation alone returns every document (no outer join needed)
-    covered.groupBy(col("doc_id")).agg(
-      array_join(transform(
-        array_sort(collect_list(when(!col("covered"), struct(col("pos"), col("w"))))),
-        s => s.getField("w")), " ").as("clean_text"),
-      count(lit(1)).as("n_tokens"),
-      count(when(col("covered"), lit(1))).as("n_removed"))
+      .groupBy(col("doc_id")).agg(
+        array_join(transform(
+          array_sort(collect_list(when(!col("covered"), struct(col("pos"), col("w"))))),
+          s => s.getField("w")), " ").as("clean_text"),
+        count(lit(1)).as("n_tokens"),
+        count(when(col("covered"), lit(1))).as("n_removed"))
   }
 
   /** Unicode NFC canonicalization of document text — run BEFORE any
@@ -1768,19 +1771,14 @@ object TrainingOps {
   /** Small-file compaction planner — the table-maintenance op next to
     * the vacuum seam: group each partition's files into merge bins of
     * roughly `targetBytes` by cumulative size in deterministic file
-    * order (bin = floor(running-sum-BEFORE / target), the exact integer
-    * prefix-sum shape of [[tokenBudgetChunks]]). A bin closes after the
-    * file that crosses the target, so bin size < target + one file; a
-    * file larger than the target ends its own bin by construction. One
+    * order ([[prefixBin]], as in [[tokenBudgetChunks]]), so bin size <
+    * target + one file; a file larger than the target ends its own bin
+    * by construction. One
     * exchange keyed on the table partition; output is file-count-sized
     * (a compactor executes one merge task per (part, bin)). */
   def compactionPlan(files: DataFrame, targetBytes: Long): DataFrame = {
     require(targetBytes > 0, s"targetBytes must be positive, got $targetBytes")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("part")).orderBy(col("file"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    files.withColumn("bin",
-      floor(coalesce(sum(col("bytes")).over(w), lit(0L)) / targetBytes))
+    files.withColumn("bin", prefixBin("bytes", "part", "file", targetBytes))
       .select(col("part"), col("file"), col("bytes"), col("bin"))
   }
 
@@ -1799,8 +1797,8 @@ object TrainingOps {
     require(k > 0, s"k must be positive, got $k")
     val scored = docs.withColumn("_score", score.cast("long"))
     val counts = scored.groupBy(col("_score")).agg(count(lit(1)).as("cnt"))
-    val w = org.apache.spark.sql.expressions.Window.orderBy(col("_score").desc)
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
+    val w = Window.orderBy(col("_score").desc)
+      .rowsBetween(Window.unboundedPreceding, -1)
     val total = counts.agg(sum(col("cnt")).as("n"))
     val shardMap = counts
       .withColumn("cum_before", coalesce(sum(col("cnt")).over(w), lit(0L)))
@@ -1834,30 +1832,10 @@ object TrainingOps {
       .select(explode(shinglesRaw(col("text"), n)).as("g"))
       .select(xxhash64(col("g")).as("gh")).distinct()
       .withColumn("hit", lit(1))
-    val ws = docs.select(col("doc_id"), split(col("text"), " ").as("ws"))
-    val toks = ws.select(col("doc_id"),
-        posexplode(transform(col("ws"), (w, i) => struct(
-          w.as("w"),
-          when(i <= size(col("ws")) - n,
-            xxhash64(concat_ws(" ", slice(col("ws"), i + 1, lit(n))))).as("gh"))))
-          .as(Seq("pos", "t")))
+    val toks = gramTokens(docs, n)
       .select(col("doc_id"), col("pos"), col("t.w").as("w"), col("t.gh").as("gh"))
-    val flagged = toks.join(broadcast(evalGrams), Seq("gh"), "left")
-      .withColumn("dup_start", col("hit").isNotNull)
-    val coverW = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("doc_id")).orderBy(col("pos"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
-    val covered = flagged
-      .withColumn("last_start", max(when(col("dup_start"), col("pos"))).over(coverW))
-      .withColumn("covered",
-        col("last_start").isNotNull && col("last_start") >= col("pos") - (n - 1))
-    covered.groupBy(col("doc_id")).agg(
-      array_join(transform(
-        array_sort(collect_list(when(!col("covered"), struct(col("pos"), col("w"))))),
-        s => s.getField("w")), " ").as("clean_text"),
-      count(lit(1)).as("n_tokens"),
-      count(when(col("covered"), lit(1))).as("n_removed"))
+    cutCovered(toks.join(broadcast(evalGrams), Seq("gh"), "left")
+      .withColumn("dup_start", col("hit").isNotNull), n)
   }
 
   /** Case-sensitive single-space k-shingles (the [[removeDupNgramSpans]]

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import scala.util.control.NonFatal
 import graft.Model.MediaRow.sizeBucket
 import graft.sources.Warc
 
@@ -39,7 +40,7 @@ object WarcOps {
               .map { case ((uri, body), i) => (uri, s"$ref#$i", body, sizeBucket(body.length)) }
               .toVector
           } catch {
-            case _: Exception => Vector((ref, s"$ref#bad", bytes, sizeBucket(bytes.length)))
+            case NonFatal(_) => Vector((ref, s"$ref#bad", bytes, sizeBucket(bytes.length)))
           }
         }
       }

@@ -1,6 +1,7 @@
 package graft.pdf
 
 import scala.collection.mutable
+import scala.util.control.NonFatal
 import Lex._
 
 /** Code → UTF-16BE/UTF-8 mapping with per-entry lazy conversion
@@ -180,8 +181,8 @@ object CMap {
   /** cmap.cc:210-231 */
   private def getBfchar(stream: String, offset0: Int, cmap: CMap): Int = {
     val pos = new Pos(offset0)
-    val src = try Some(convert2string(getToken(stream, pos))) catch { case _: Throwable => None }
-    val dst = try Some(convert2string(getToken(stream, pos))) catch { case _: Throwable => None }
+    val src = try Some(convert2string(getToken(stream, pos))) catch { case NonFatal(_) => None }
+    val dst = try Some(convert2string(getToken(stream, pos))) catch { case NonFatal(_) => None }
     if (src.isEmpty || dst.isEmpty) return pos.i + 1
     if (!cmap.utfMap.contains(src.get)) cmap.utfMap.update(src.get, new Entry(false, dst.get))
     cmap.sizes(src.get.length) = 1

@@ -1,6 +1,7 @@
 package graft.pdf
 
 import scala.collection.mutable
+import scala.util.control.NonFatal
 import Lex._
 
 /** Glyph-box rectangle, 32-bit floats for parity (coordinates.h:11-32). */
@@ -134,7 +135,7 @@ final class Coordinates(ctm0: Array[Float]) {
       val f = st.popF(); val e = st.popF(); val d = st.popF()
       val c = st.popF(); val b = st.popF(); val a = st.popF()
       ctm = matMul(Array(a, b, c, d, e, f), ctm)
-    } catch { case _: Throwable => } // errors swallowed (coordinates.cc:94-103)
+    } catch { case NonFatal(_) => } // errors swallowed (coordinates.cc:94-103)
   }
 
   def doQ(st: OpStack): Unit = ctms.push(ctm)

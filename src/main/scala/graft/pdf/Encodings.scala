@@ -2,6 +2,7 @@ package graft.pdf
 
 import java.nio.charset.{Charset, StandardCharsets}
 import scala.collection.mutable
+import scala.util.control.NonFatal
 
 /** Static encoding data: the four single-byte base encodings
   * (Standard/MacRoman/MacExpert/WinAnsi), the CID-CMap-name → charset map,
@@ -136,7 +137,7 @@ object Encodings {
       case other => Seq(other)
     }
     candidates.iterator.flatMap { c =>
-      try Some(Charset.forName(c)) catch { case _: Exception => None }
+      try Some(Charset.forName(c)) catch { case NonFatal(_) => None }
     }.nextOption()
   }
 

@@ -1,6 +1,7 @@
 package graft.pdf
 
 import scala.collection.mutable
+import scala.util.control.NonFatal
 import Lex._
 
 /** Page-tree walk + content-stream interpreter (reference:
@@ -494,7 +495,7 @@ final class PagesExtractor(
       idsGen: mutable.ArrayBuffer[(Long, Long)],
       visitedIds: mutable.Set[Long]): String =
     try getStreamContents(pageId, idsGen, visitedIds)
-    catch { case _: Exception => "" }
+    catch { case NonFatal(_) => "" }
 
   /** pages_extractor.cc:764-779 — page-major text, annotations best-effort. */
   def getText(): String = {

@@ -1,6 +1,7 @@
 package graft.pdf
 
 import scala.collection.mutable
+import scala.util.control.NonFatal
 import Lex._
 
 /** Cross-reference machinery: startxref discovery, classic xref tables,
@@ -281,7 +282,7 @@ object XRef {
       getAllObjectOffsets(buffer, trailerOffsets).foreach(off => insert2offsets(id2offsets, buffer, off))
       id2offsets
     } catch {
-      case _: Throwable => getId2OffsetsBroken(buffer)
+      case NonFatal(_) => getId2OffsetsBroken(buffer)
     }
   }
 

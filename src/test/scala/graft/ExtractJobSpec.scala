@@ -222,6 +222,28 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(small.collect().map(key).sorted.toSeq == heavy.collect().map(key).sorted.toSeq)
   }
 
+  test("one router: a NULL, an oversized and a typical size_bucket each come back exactly once") {
+    implicit val s: SparkSession = spark
+    import s.implicits._
+    // heavyBucket = 4: buckets above it (payloads over 16 bytes) shuffle
+    val media = Seq(
+      ("typical", "image/png", Array.fill[Byte](9)(1), Some(Model.MediaRow.sizeBucket(9))),
+      ("null_bucket", "image/png", Array.fill[Byte](100)(2), None),
+      ("oversized", "image/png", Array.fill[Byte](100)(3), Some(Model.MediaRow.sizeBucket(100))))
+      .toDF("media_ref", "kind", "bytes", "size_bucket")
+    val refs = Seq("typical", "null_bucket", "oversized")
+    val counts = new Model.LineageCounts
+    s.sparkContext.register(counts)
+    val extracted = ExtractJob.extractMedia(media, refs.toDF("media_ref"), 4, heavyBucket = 4,
+      counts = Some(counts)).collect().map(_.media_ref)
+    assert(extracted.sorted.toSeq == refs.sorted)
+    // the NULL bucket ran with the typical row in the scan stage (branch 0)
+    assert(counts.value.toSeq.groupMapReduce(_._1._1)(_._2.mediaIn)(_ + _) == Map(0 -> 2L, 1 -> 1L))
+    val featurized = operators.MediaOps.featurize(media, dim = 4, numPartitions = 4, heavyBucket = 4)
+      .collect().map(_.media_ref)
+    assert(featurized.sorted.toSeq == refs.sorted)
+  }
+
   test("poison documents become error spans, job survives") {
     implicit val s: SparkSession = spark
     import s.implicits._

@@ -17,23 +17,27 @@ object MediaOps {
   case class MediaFeatures(media_ref: String, kind: String, n_bytes: Long,
                            width: Int, height: Int, feature: Array[Float])
 
-  /** Stub "decoded dimensions" from the payload hash — public so the
-    * by-construction oracle can be built from the same formula. */
-  def stubDims(bytes: Array[Byte]): (Int, Int) = {
+  /** The payload hash every stub decode derives from (polynomial, 31). */
+  private def payloadHash(bytes: Array[Byte]): Long = {
     var h = 1125899906842597L
     var i = 0
     while (i < bytes.length) { h = 31 * h + bytes(i); i += 1 }
-    (64 + math.floorMod(h, 64).toInt, 64 + math.floorMod(h >> 8, 64).toInt)
+    h
   }
+
+  /** Stub "decoded dimensions" from the payload hash — public so the
+    * by-construction oracle can be built from the same formula. */
+  def stubDims(bytes: Array[Byte]): (Int, Int) = dimsOf(payloadHash(bytes))
+
+  private def dimsOf(h: Long): (Int, Int) =
+    (64 + math.floorMod(h, 64).toInt, 64 + math.floorMod(h >> 8, 64).toInt)
 
   /** STUB decoder: deterministic pseudo-decode. A real implementation
     * returns decoded dimensions + an embedding; this fake derives both from
     * the payload hash so tests are stable. */
   private def decodeStub(kind: String, bytes: Array[Byte], dim: Int): (Int, Int, Array[Float]) = {
-    var h = 1125899906842597L
-    var i = 0
-    while (i < bytes.length) { h = 31 * h + bytes(i); i += 1 }
-    val (w, ht) = stubDims(bytes)
+    val h = payloadHash(bytes)
+    val (w, ht) = dimsOf(h)
     val feat = new Array[Float](dim)
     var k = 0
     var s = h
@@ -124,12 +128,19 @@ object MediaOps {
     * typed pass computes dHash per blob (bytes never shuffle), then the
     * shared 4-band pigeonhole join pairs signatures within `maxHamming`
     * (exact for ≤ 3, mega-bucket capped). Undecodable blobs drop. */
-  def dHashPairs(media: DataFrame, maxHamming: Int = 3, maxBucket: Int = 64): DataFrame = {
+  def dHashPairs(media: DataFrame, maxHamming: Int = 3, maxBucket: Int = 64): DataFrame =
+    hashPairs(media, maxHamming, maxBucket)(dHash)
+
+  /** The near-duplicate pairing of [[dHashPairs]] and [[wavHashPairs]]:
+    * `hash` (a 64-char bit string, null = undecodable → dropped) per blob
+    * in one narrow typed pass, then the shared 4-band pigeonhole join. */
+  private def hashPairs(media: DataFrame, maxHamming: Int, maxBucket: Int)
+                       (hash: Array[Byte] => String): DataFrame = {
     val spark = media.sparkSession
     import spark.implicits._
     val sig = media.select(col("media_ref"), col("bytes"))
       .as[(String, Array[Byte])]
-      .mapPartitions(_.map { case (ref, b) => (ref, dHash(b)) })
+      .mapPartitions(_.map { case (ref, b) => (ref, hash(b)) })
       .toDF("media_ref", "simhash")
       .na.drop(Seq("simhash"))
     TrainingOps.hammingDupPairsFromSig(sig, "media_ref", maxHamming, maxBucket)
@@ -179,17 +190,8 @@ object MediaOps {
     * audio leg of media dedup, same shape as [[dHashPairs]]: one narrow
     * typed hashing pass (bytes never shuffle), shared 4-band pigeonhole
     * join, undecodable blobs drop. */
-  def wavHashPairs(media: DataFrame, maxHamming: Int = 3, maxBucket: Int = 64): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    val sig = media.select(col("media_ref"), col("bytes"))
-      .as[(String, Array[Byte])]
-      .mapPartitions(_.map { case (ref, b) => (ref, wavHash(b)) })
-      .toDF("media_ref", "simhash")
-      .na.drop(Seq("simhash"))
-    TrainingOps.hammingDupPairsFromSig(sig, "media_ref", maxHamming, maxBucket)
-      .select(col("doc_a").as("ref_a"), col("doc_b").as("ref_b"), col("hamming"))
-  }
+  def wavHashPairs(media: DataFrame, maxHamming: Int = 3, maxBucket: Int = 64): DataFrame =
+    hashPairs(media, maxHamming, maxBucket)(wavHash)
 
   /** REAL WAV decode via javax.sound.sampled: (sampleRate, frames) as the
     * "dimensions", per-segment RMS amplitude as the feature vector. */
@@ -324,9 +326,7 @@ object MediaOps {
     * routing, bounded maxFrames) is real and testable end-to-end; swap
     * for a JNI codec in production. Public for the oracle builder. */
   def stubFrames(bytes: Array[Byte], everyNth: Int, maxFrames: Int): Seq[(Int, Int, Long)] = {
-    var h = 1125899906842597L
-    var i = 0
-    while (i < bytes.length) { h = 31 * h + bytes(i); i += 1 }
+    val h = payloadHash(bytes)
     val totalFrames = 8 + math.floorMod(h, 120).toInt // stub "video length"
     (0 until totalFrames by everyNth).take(maxFrames).map { idx =>
       var s = h + idx * 0x9e3779b97f4a7c15L

@@ -41,6 +41,19 @@ object TrainingOps {
   def shingles(text: Column, k: Int): Column =
     NativeFunctions.call("graft_shingles", text, lit(k))
 
+  /** Each document's DISTINCT word `n`-grams: one row per gram, named `g`,
+    * after the `keep` columns — the gram set of the decontamination and
+    * duplicate-n-gram operators (eval side: `gramRows(evalDocs, n).distinct()`). */
+  private[graft] def gramRows(docs: DataFrame, n: Int, keep: Column*): DataFrame =
+    docs.select(keep :+ explode(array_distinct(shingles(col("text"), n))).as("g"): _*)
+
+  /** Lowercase whitespace words of one text, the typed twin of [[wordRows]]:
+    * unlike it, keeps the empty tokens `split` yields (a leading one for
+    * text that starts with whitespace, one for `""`); each caller decides
+    * whether to drop them. */
+  private[graft] def wordSplit(text: String): Array[String] =
+    text.toLowerCase(java.util.Locale.ROOT).split("\\s+")
+
   /** FNV-1a 64-bit over a string (shingle base hash). */
   @inline private def fnv64(s: String): Long = {
     var h = 0xcbf29ce484222325L
@@ -68,7 +81,7 @@ object TrainingOps {
     * shingle SET (so texts with equal shingle sets — e.g. a sentence
     * repeated 2× vs 3× — get identical signatures). */
   def minhashSig(text: String, numHashes: Int = 16, shingleK: Int = 3): Array[Long] = {
-    val toks = text.toLowerCase(java.util.Locale.ROOT).split("\\s+")
+    val toks = wordSplit(text)
     val sig = Array.fill(numHashes)(Long.MaxValue)
     val n = math.max(1, toks.length - shingleK + 1)
     val sb = new java.lang.StringBuilder(64)
@@ -222,7 +235,7 @@ object TrainingOps {
       .mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")
         it.map { case (id, text) =>
-          val toks = text.toLowerCase(java.util.Locale.ROOT).split("\\s+")
+          val toks = wordSplit(text)
           val votes = new Array[Int](64)
           var t = 0
           while (t < toks.length) {
@@ -832,11 +845,17 @@ object TrainingOps {
     docs.withColumn("split", split)
   }
 
+  /** Lowercase whitespace words of `text`: one row per non-empty word,
+    * named `name`, after the `keep` columns — the tokenizer of the vocab,
+    * tf-idf, index, BPE and Count-Min operators. */
+  private[graft] def wordRows(docs: DataFrame, name: String, keep: Column*): DataFrame =
+    docs.select(keep :+ explode(split(lower(col("text")), "\\s+")).as(name): _*)
+      .where(col(name) =!= "")
+
   /** Vocabulary top-k: term frequencies over whitespace tokens. Classic
     * map-side-combined aggregation; ties broken by term for determinism. */
   def vocabTopK(docs: DataFrame, k: Int = 100): DataFrame =
-    docs.select(explode(split(lower(col("text")), "\\s+")).as("term"))
-      .where(col("term") =!= "")
+    wordRows(docs, "term")
       .groupBy(col("term")).agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("term"))
       .limit(k)
@@ -847,8 +866,7 @@ object TrainingOps {
     * One explode + one term-keyed aggregation with map-side partial
     * counts; output is vocabulary-sized, never corpus-sized. */
   def termDocFreq(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), explode(split(lower(col("text")), "\\s+")).as("term"))
-      .where(col("term") =!= "")
+    wordRows(docs, "term", col("doc_id"))
       .groupBy(col("term"))
       .agg(count(lit(1)).as("tf"), countDistinct(col("doc_id")).as("df"))
 
@@ -862,8 +880,7 @@ object TrainingOps {
     * dropped terms are exactly the df > maxDf ones, disclosed by the
     * companion df column contract rather than silently truncated lists. */
   def invertedIndex(docs: DataFrame, maxDf: Long = 1000000L): DataFrame =
-    docs.select(col("doc_id"), explode(split(lower(col("text")), "\\s+")).as("term"))
-      .where(col("term") =!= "")
+    wordRows(docs, "term", col("doc_id"))
       .groupBy(col("term"), col("doc_id")).agg(count(lit(1)).as("tf_d"))
       .groupBy(col("term"))
       .agg(count(lit(1)).as("df"),
@@ -879,8 +896,7 @@ object TrainingOps {
     * choose; df of real corpora fits comfortably in a broadcast). */
   def tfIdf(docs: DataFrame, topK: Int = 5): DataFrame = {
     val n = docs.count()
-    val terms = docs.select(col("doc_id"), explode(split(lower(col("text")), "\\s+")).as("term"))
-      .where(col("term") =!= "")
+    val terms = wordRows(docs, "term", col("doc_id"))
     val tf = terms.groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
     val df = terms.groupBy(col("term")).agg(countDistinct(col("doc_id")).as("df"))
     val w = Window
@@ -1110,25 +1126,40 @@ object TrainingOps {
     * because it is cross-engine verifiable; [[bpeMergesGreedy]] is the
     * standard-semantics trainer (QueriesSpec documents the divergence on
     * a 4-repeat word). */
-  def bpeMerges(docs: DataFrame, numMerges: Int = 2): DataFrame = {
+  def bpeMerges(docs: DataFrame, numMerges: Int = 2): DataFrame =
+    bpeTrain(docs, numMerges,
+      symbols = concat(lit(" "), concat_ws(" ", split(col("w"), "")), lit(" ")),
+      symArray = split(trim(col("syms")), " ")) { (vocab, pair) =>
+      vocab.select(
+        replace(col("syms"), lit(" " + pair + " "), lit(" " + pair.replace(" ", "") + " ")).as("syms"),
+        col("freq"))
+    }
+
+  /** The BPE training loop of [[bpeMerges]] and [[bpeMergesGreedy]]: the
+    * distinct-word vocabulary (syms, freq) with `symbols` built from the
+    * word `w`, persisted; per round, the adjacent pairs of `symArray`
+    * (the symbols as array<string>) counted by word frequency and the
+    * 1-row argmax collected; then `rewrite` merges the adopted pair into
+    * the vocabulary for the next round. */
+  private def bpeTrain(docs: DataFrame, numMerges: Int, symbols: Column, symArray: Column)
+                      (rewrite: (DataFrame, String) => DataFrame): DataFrame = {
     import org.apache.spark.storage.StorageLevel
     val spark = docs.sparkSession
     import spark.implicits._
     val pairsExpr =
-      """CASE WHEN size(els) > 1
-        |  THEN transform(sequence(1, size(els) - 1), i -> concat(element_at(els, i), ' ', element_at(els, i + 1)))
+      """CASE WHEN size(syms) > 1
+        |  THEN transform(sequence(1, size(syms) - 1), i -> concat(element_at(syms, i), ' ', element_at(syms, i + 1)))
         |  ELSE array() END""".stripMargin
-    var words = docs.select(explode(split(lower(col("text")), "\\s+")).as("w"))
-      .where(col("w") =!= "")
+    var vocab = wordRows(docs, "w")
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))
-      .select(concat(lit(" "), concat_ws(" ", split(col("w"), "")), lit(" ")).as("syms"), col("freq"))
+      .select(symbols.as("syms"), col("freq"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val merges = Seq.newBuilder[(Int, String, Long)]
     var rank = 1
     var exhausted = false
     while (rank <= numMerges && !exhausted) {
-      val top = words
-        .select(split(trim(col("syms")), " ").as("els"), col("freq"))
+      val top = vocab
+        .select(symArray.as("syms"), col("freq"))
         .select(explode(expr(pairsExpr)).as("p"), col("freq"))
         .groupBy(col("p")).agg(sum(col("freq")).as("n"))
         .orderBy(col("n").desc, col("p")).limit(1).collect()
@@ -1140,17 +1171,15 @@ object TrainingOps {
           // the rewritten vocabulary only feeds the NEXT round's pair
           // count — after the final adopted merge there is no next round,
           // so the last rewrite+materialization job is skipped outright
-          val next = words.select(
-            replace(col("syms"), lit(" " + pair + " "), lit(" " + pair.replace(" ", "") + " ")).as("syms"),
-            col("freq")).persist(StorageLevel.MEMORY_AND_DISK)
+          val next = rewrite(vocab, pair).persist(StorageLevel.MEMORY_AND_DISK)
           next.count() // materialize before dropping the previous round
-          words.unpersist(blocking = false)
-          words = next
+          vocab.unpersist(blocking = false)
+          vocab = next
         }
         rank += 1
       }
     }
-    words.unpersist(blocking = false)
+    vocab.unpersist(blocking = false)
     spark.createDataset(merges.result()).toDF("rank", "pair", "n")
   }
 
@@ -1193,7 +1222,7 @@ object TrainingOps {
   }
 
   /** [[bpeMerges]] with STANDARD (Sennrich/HuggingFace) rewrite
-    * semantics: pair counting is identical (one explode + partial-agg
+    * semantics: the same [[bpeTrain]] loop (one explode + partial-agg
     * count over the persisted distinct-word vocab, 1-row argmax per
     * round), but each round's rewrite is a typed narrow pass applying
     * [[mergePairOnce]] — so runs of identical symbols merge pairwise
@@ -1202,46 +1231,13 @@ object TrainingOps {
     * so it is pinned by sbt specs (textbook low/lower/newest corpus + a
     * 4-repeat word) rather than a driver row. */
   def bpeMergesGreedy(docs: DataFrame, numMerges: Int = 2): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val pairsExpr =
-      """CASE WHEN size(syms) > 1
-        |  THEN transform(sequence(1, size(syms) - 1), i -> concat(element_at(syms, i), ' ', element_at(syms, i + 1)))
-        |  ELSE array() END""".stripMargin
-    var vocab = docs.select(explode(split(lower(col("text")), "\\s+")).as("w"))
-      .where(col("w") =!= "")
-      .groupBy(col("w")).agg(count(lit(1)).as("freq"))
-      .select(split(col("w"), "").as("syms"), col("freq"))
-      .as[(Seq[String], Long)]
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val merges = Seq.newBuilder[(Int, String, Long)]
-    var rank = 1
-    var exhausted = false
-    while (rank <= numMerges && !exhausted) {
-      val top = vocab.toDF("syms", "freq")
-        .select(explode(expr(pairsExpr)).as("p"), col("freq"))
-        .groupBy(col("p")).agg(sum(col("freq")).as("n"))
-        .orderBy(col("n").desc, col("p")).limit(1).collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val pair = top(0).getString(0)
-        merges += ((rank, pair, top(0).getLong(1)))
-        if (rank < numMerges) {
-          // as in [[bpeMerges]]: no next round after the final adopted
-          // merge, so the last rewrite+materialization is skipped
-          val Array(a, b) = pair.split(" ", 2)
-          val next = vocab.map { case (syms, f) => (mergePairOnce(syms.toArray, a, b).toSeq, f) }
-            .persist(StorageLevel.MEMORY_AND_DISK)
-          next.count() // materialize before dropping the previous round
-          vocab.unpersist(blocking = false)
-          vocab = next
-        }
-        rank += 1
-      }
+    import docs.sparkSession.implicits._
+    bpeTrain(docs, numMerges, symbols = split(col("w"), ""), symArray = col("syms")) { (vocab, pair) =>
+      val Array(a, b) = pair.split(" ", 2)
+      vocab.as[(Seq[String], Long)]
+        .map { case (syms, f) => (mergePairOnce(syms.toArray, a, b).toSeq, f) }
+        .toDF("syms", "freq")
     }
-    vocab.unpersist(blocking = false)
-    spark.createDataset(merges.result()).toDF("rank", "pair", "n")
   }
 
   /** Apply a fixed ranked merge chain corpus-wide and count the resulting
@@ -1256,8 +1252,7 @@ object TrainingOps {
     * Sennrich-exact variant. Merges are " a b"-style space-joined pairs
     * applied in list order. */
   def bpeEncode(docs: DataFrame, merges: Seq[String]): DataFrame = {
-    val words = docs.select(col("doc_id"), explode(split(lower(col("text")), "\\s+")).as("w"))
-      .where(col("w") =!= "")
+    val words = wordRows(docs, "w", col("doc_id"))
     val syms0 = concat(lit(" "), concat_ws(" ", split(col("w"), "")), lit(" "))
     val merged = merges.foldLeft(syms0) { (c, p) =>
       replace(c, lit(" " + p + " "), lit(" " + p.replace(" ", "") + " "))
@@ -1279,7 +1274,7 @@ object TrainingOps {
     docs.select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
       .mapPartitions { it =>
         it.map { case (id, text) =>
-          val ws = text.toLowerCase(java.util.Locale.ROOT).split("\\s+").filter(_.nonEmpty)
+          val ws = wordSplit(text).filter(_.nonEmpty)
           var total = 0L
           ws.foreach { w => total += applyMergesGreedy(w, merges).length }
           (id, ws.length.toLong, total)
@@ -1361,10 +1356,8 @@ object TrainingOps {
     * text as one gram (shingles' contract), so exact copies of short
     * eval rows are still caught. */
   def decontaminate(docs: DataFrame, evalDocs: DataFrame, n: Int = 13): DataFrame = {
-    val evalGrams = evalDocs
-      .select(explode(array_distinct(shingles(col("text"), n))).as("g")).distinct()
-    val contaminated = docs
-      .select(col("doc_id"), explode(array_distinct(shingles(col("text"), n))).as("g"))
+    val evalGrams = gramRows(evalDocs, n).distinct()
+    val contaminated = gramRows(docs, n, col("doc_id"))
       .join(evalGrams, Seq("g"), "left_semi")
       .select(col("doc_id")).distinct()
     docs.join(contaminated, Seq("doc_id"), "left_anti")
@@ -1384,12 +1377,10 @@ object TrainingOps {
   def decontaminateBloom(docs: DataFrame, evalDocs: DataFrame, n: Int = 13,
                          bitsPerItem: Int = 12): DataFrame = {
     NativeFunctions.register(docs.sparkSession)
-    val evalGrams = evalDocs
-      .select(explode(array_distinct(shingles(col("text"), n))).as("g")).distinct()
+    val evalGrams = gramRows(evalDocs, n).distinct()
     val bloom = buildBloom(evalGrams, "g", bitsPerItem)
     val bloomB64 = java.util.Base64.getEncoder.encodeToString(bloom)
-    val candidates = docs
-      .select(col("doc_id"), explode(array_distinct(shingles(col("text"), n))).as("g"))
+    val candidates = gramRows(docs, n, col("doc_id"))
       // unbase64 of a literal constant-folds to one binary literal
       .where(expr(s"graft_bloom_contains(unbase64('$bloomB64'), xxhash64(g))"))
     val contaminated = candidates
@@ -1590,8 +1581,7 @@ object TrainingOps {
     * (bounded, same argument as LSH mega-buckets). Exact modulo xxhash64
     * gram collisions (the oracle compares gram strings). */
   def dupNgramFraction(docs: DataFrame, n: Int = 13): DataFrame = {
-    val grams = docs
-      .select(col("doc_id"), explode(array_distinct(shingles(col("text"), n))).as("g"))
+    val grams = gramRows(docs, n, col("doc_id"))
       .select(col("doc_id"), xxhash64(col("g")).as("gh"))
     val w = Window.partitionBy(col("gh"))
     grams.withColumn("df", count(lit(1)).over(w))
@@ -1614,10 +1604,8 @@ object TrainingOps {
     * aggregated per-doc count. One corpus scan, no shuffle of gram text
     * except the doc_id aggregation of two counters. */
   def contaminationScore(docs: DataFrame, evalDocs: DataFrame, n: Int = 13): DataFrame = {
-    val evalGrams = evalDocs
-      .select(explode(array_distinct(shingles(col("text"), n))).as("g")).distinct()
-      .withColumn("hit", lit(1))
-    docs.select(col("doc_id"), explode(array_distinct(shingles(col("text"), n))).as("g"))
+    val evalGrams = gramRows(evalDocs, n).distinct().withColumn("hit", lit(1))
+    gramRows(docs, n, col("doc_id"))
       .join(broadcast(evalGrams), Seq("g"), "left")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_grams"), count(col("hit")).as("n_eval_grams"))

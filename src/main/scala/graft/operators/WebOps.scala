@@ -112,24 +112,41 @@ object WebOps {
     * are small and one-per-host, so per-key state is a few hundred lines;
     * everything is codegen'd expressions, no UDFs, and the oracle
     * replicates it line for line. */
-  def parseRobots(robots: DataFrame, host: Column, content: Column): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("host")).orderBy(col("ln"))
-    val cls = robots
-      .select(host.as("host"), posexplode(split(content, "\n")).as(Seq("ln", "raw")))
+  def parseRobots(robots: DataFrame, host: Column, content: Column): DataFrame =
+    starGroupRules(robots, host, content,
+      Seq("dis" -> when(lower(col("line")).startsWith("disallow:"), trim(expr("substring(line, 10)")))),
+      col("dis").isNotNull && col("dis") =!= "",
+      col("host"), col("dis").as("path_prefix"))
+
+  /** robots.txt bodies as one row per line: (host, ln, raw, line), `line`
+    * trimmed with its `#` comment cut. */
+  private def robotsLines(robots: DataFrame, host: Column, content: Column): DataFrame =
+    robots.select(host.as("host"), posexplode(split(content, "\n")).as(Seq("ln", "raw")))
       .withColumn("line", trim(regexp_replace(col("raw"), "#.*", "")))
+
+  /** The rule lines of the wildcard-agent groups, the grouping of
+    * [[parseRobots]] and [[parseRobotsRules]]: each line is classified
+    * (`is_ua`, `ua`, then the parser's `rules` columns in order); a run of
+    * consecutive `User-agent` lines opens group `grp` (per host, in line
+    * order); the lines passing `keep` in a group that names `*` are
+    * selected as `out`, distinct. */
+  private def starGroupRules(robots: DataFrame, host: Column, content: Column,
+                             rules: Seq[(String, Column)], keep: Column, out: Column*): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("host")).orderBy(col("ln"))
+    val cls = rules.foldLeft(robotsLines(robots, host, content)
       .withColumn("is_ua", lower(col("line")).startsWith("user-agent:"))
-      .withColumn("ua", when(col("is_ua"), trim(expr("substring(line, 12)"))))
-      .withColumn("dis", when(lower(col("line")).startsWith("disallow:"),
-        trim(expr("substring(line, 10)"))))
+      .withColumn("ua", when(col("is_ua"), trim(expr("substring(line, 12)"))))) {
+      case (df, (name, c)) => df.withColumn(name, c)
+    }
     val grouped = cls
       .withColumn("new_grp",
         col("is_ua") && !coalesce(lag(col("is_ua"), 1).over(w), lit(false)))
       .withColumn("grp", sum(when(col("new_grp"), 1).otherwise(0)).over(w))
     val starGroups = grouped.where(col("ua") === "*")
       .select(col("host"), col("grp")).distinct()
-    grouped.where(col("dis").isNotNull && col("dis") =!= "")
+    grouped.where(keep)
       .join(starGroups, Seq("host", "grp"))
-      .select(col("host"), col("dis").as("path_prefix"))
+      .select(out: _*)
       .distinct()
   }
 
@@ -141,8 +158,7 @@ object WebOps {
     * frontier-seeding chain. Comments strip first (a `#` ends the value);
     * pure codegen string expressions, no shuffle. */
   def robotsSitemaps(robots: DataFrame, host: Column, content: Column): DataFrame =
-    robots.select(host.as("host"), posexplode(split(content, "\n")).as(Seq("ln", "raw")))
-      .withColumn("line", trim(regexp_replace(col("raw"), "#.*", "")))
+    robotsLines(robots, host, content)
       .where(lower(col("line")).startsWith("sitemap:"))
       .withColumn("sitemap", trim(expr("substring(line, 9)")))
       .where(col("sitemap") =!= "")
@@ -255,30 +271,15 @@ object WebOps {
     * semantics, comment stripping and case handling as [[parseRobots]];
     * empty rule values carry no information under longest-match and are
     * dropped. Output: (host, rule, pattern). */
-  def parseRobotsRules(robots: DataFrame, host: Column, content: Column): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("host")).orderBy(col("ln"))
-    val cls = robots
-      .select(host.as("host"), posexplode(split(content, "\n")).as(Seq("ln", "raw")))
-      .withColumn("line", trim(regexp_replace(col("raw"), "#.*", "")))
-      .withColumn("is_ua", lower(col("line")).startsWith("user-agent:"))
-      .withColumn("ua", when(col("is_ua"), trim(expr("substring(line, 12)"))))
-      .withColumn("rule",
-        when(lower(col("line")).startsWith("disallow:"), lit("disallow"))
-          .when(lower(col("line")).startsWith("allow:"), lit("allow")))
-      .withColumn("pattern",
-        when(col("rule") === "disallow", trim(expr("substring(line, 10)")))
-          .when(col("rule") === "allow", trim(expr("substring(line, 7)"))))
-    val grouped = cls
-      .withColumn("new_grp",
-        col("is_ua") && !coalesce(lag(col("is_ua"), 1).over(w), lit(false)))
-      .withColumn("grp", sum(when(col("new_grp"), 1).otherwise(0)).over(w))
-    val starGroups = grouped.where(col("ua") === "*")
-      .select(col("host"), col("grp")).distinct()
-    grouped.where(col("rule").isNotNull && col("pattern") =!= "")
-      .join(starGroups, Seq("host", "grp"))
-      .select(col("host"), col("rule"), col("pattern"))
-      .distinct()
-  }
+  def parseRobotsRules(robots: DataFrame, host: Column, content: Column): DataFrame =
+    starGroupRules(robots, host, content,
+      Seq(
+        "rule" -> when(lower(col("line")).startsWith("disallow:"), lit("disallow"))
+          .when(lower(col("line")).startsWith("allow:"), lit("allow")),
+        "pattern" -> when(col("rule") === "disallow", trim(expr("substring(line, 10)")))
+          .when(col("rule") === "allow", trim(expr("substring(line, 7)")))),
+      col("rule").isNotNull && col("pattern") =!= "",
+      col("host"), col("rule"), col("pattern"))
 
   /** RFC 9309 robots compliance filter — the full matching semantics the
     * prefix-only [[robotsFilter]] documents as out of scope: `*` in a

@@ -500,26 +500,22 @@ final class PagesExtractor(
   /** pages_extractor.cc:764-779 — page-major text, annotations best-effort. */
   def getText(): String = {
     val sb = new java.lang.StringBuilder
-    pages.foreach { pageId =>
-      val visited = mutable.Set.empty[Long]
-      val pagePair = storage.getObject(pageId)
-      if (pagePair.kind != Kind.DICTIONARY) err("get_text: page must be DICTIONARY")
-      val pageDict = getDictionaryData(pagePair.raw, 0)
-      sb.append(getStreamContents(pageId, getIdGenFromDictionary(pageDict, "/Contents"), visited))
-      sb.append(getStreamContentsNoException(pageId, getIdGenApN(pageDict), visited))
-    }
+    pages.foreach(appendPageText(_, sb))
     sb.toString
   }
 
   /** Structured variant: per-page extracted text, page order. */
-  def getPageTexts(): Seq[String] = {
-    pages.iterator.map { pageId =>
-      val visited = mutable.Set.empty[Long]
-      val pagePair = storage.getObject(pageId)
-      if (pagePair.kind != Kind.DICTIONARY) err("get_text: page must be DICTIONARY")
-      val pageDict = getDictionaryData(pagePair.raw, 0)
-      getStreamContents(pageId, getIdGenFromDictionary(pageDict, "/Contents"), visited) +
-        getStreamContentsNoException(pageId, getIdGenApN(pageDict), visited)
-    }.toSeq
+  def getPageTexts(): Seq[String] =
+    pages.iterator.map(pageId => appendPageText(pageId, new java.lang.StringBuilder).toString).toSeq
+
+  /** Appends one page's text to `sb` and returns it: its `/Contents`
+    * streams, then the best-effort `/AP /N` appearance text. */
+  private def appendPageText(pageId: Long, sb: java.lang.StringBuilder): java.lang.StringBuilder = {
+    val visited = mutable.Set.empty[Long]
+    val pagePair = storage.getObject(pageId)
+    if (pagePair.kind != Kind.DICTIONARY) err("get_text: page must be DICTIONARY")
+    val pageDict = getDictionaryData(pagePair.raw, 0)
+    sb.append(getStreamContents(pageId, getIdGenFromDictionary(pageDict, "/Contents"), visited))
+    sb.append(getStreamContentsNoException(pageId, getIdGenApN(pageDict), visited))
   }
 }

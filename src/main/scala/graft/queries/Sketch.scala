@@ -1,9 +1,8 @@
 package graft
 package queries
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.SketchOps
+import graft.operators.{SketchOps, TrainingOps}
 import QuerySupport._
 
 /** Mergeable sketch queries: HyperLogLog, log2 histograms and Count-Min,
@@ -61,9 +60,7 @@ object Sketch extends QueryFamily("sketch") {
       oracle = logHistogramOracleSql),
     // Count-Min sketch: the full counter matrix over word occurrences
     query("q_cms_sketch", build = (s, d) =>
-        SketchOps.cmsSketch(t(s, d, "documents")
-          .select(explode(split(lower(col("text")), "\\s+")).as("w"))
-          .where(col("w") =!= ""), col("w")),
+        SketchOps.cmsSketch(TrainingOps.wordRows(t(s, d, "documents"), "w"), col("w")),
       // the full Count-Min counter matrix recomputed in SQL
       oracle = cmsSketchOracleSql),
     // ...point-queried for the exact top-10 terms: CMS estimate beside
@@ -75,9 +72,7 @@ object Sketch extends QueryFamily("sketch") {
         // true_count — the r5 shape paid three tokenize+aggregate scans
         // (sketch, probes, true-count join) for the same numbers. The two
         // word-count consumers share one Exchange (AQE stage reuse).
-        val wc = t(s, d, "documents")
-          .select(explode(split(lower(col("text")), "\\s+")).as("w"))
-          .where(col("w") =!= "")
+        val wc = TrainingOps.wordRows(t(s, d, "documents"), "w")
           .groupBy(col("w")).agg(count(lit(1)).as("n"))
         val probes = wc.orderBy(col("n").desc, col("w")).limit(10)
           .select(col("w").as("item"), col("n"))
@@ -139,12 +134,9 @@ object Sketch extends QueryFamily("sketch") {
       oracle = logHistogramOracleSql),
     query("q_cms_merge", build = (s, d) => {
         val docs = t(s, d, "documents")
-        def words(half: DataFrame) = half
-          .select(explode(split(lower(col("text")), "\\s+")).as("w"))
-          .where(col("w") =!= "")
         SketchOps.mergeCmsSketches(
-          SketchOps.cmsSketch(words(docs.where(col("doc_id") % 2 === 0)), col("w")),
-          SketchOps.cmsSketch(words(docs.where(col("doc_id") % 2 === 1)), col("w")))
+          SketchOps.cmsSketch(TrainingOps.wordRows(docs.where(col("doc_id") % 2 === 0), "w"), col("w")),
+          SketchOps.cmsSketch(TrainingOps.wordRows(docs.where(col("doc_id") % 2 === 1), "w"), col("w")))
       },
       oracle = cmsSketchOracleSql)
   )

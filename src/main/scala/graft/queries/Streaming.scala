@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.TrainingOps
 import graft.testkit.WarcBuilder
+import graft.streaming.StreamingOps
 import graft.streaming.StreamingOps.{DocLabel, TimedDoc}
 import QuerySupport._
 
@@ -131,9 +132,8 @@ object Streaming extends QueryFamily("streaming") {
         drainToMemory(s, "graft-swin", "x_stream_window", "complete") { tmp =>
           import s.implicits._
           s.createDataset(streamDocs).toDF().coalesce(1).write.parquet(s"$tmp/in")
-          val schema = org.apache.spark.sql.Encoders.product[TimedDoc].schema
-          graft.streaming.StreamingOps.windowedDocMetrics(
-            s.readStream.schema(schema).parquet(s"$tmp/in"))
+          StreamingOps.windowedDocMetrics(
+            s.readStream.schema(StreamingOps.timedDocSchema).parquet(s"$tmp/in"))
         },
       oracle =
         ("SELECT CAST(w AS BIGINT) AS win_start, source, CAST(nd AS BIGINT) AS n_docs, CAST(nc AS BIGINT) AS n_chars " +
@@ -149,9 +149,8 @@ object Streaming extends QueryFamily("streaming") {
         drainToMemory(s, "graft-scms", "x_stream_cms", "complete") { tmp =>
           import s.implicits._
           s.createDataset(streamDocs).toDF().coalesce(1).write.parquet(s"$tmp/in")
-          val schema = org.apache.spark.sql.Encoders.product[TimedDoc].schema
-          graft.streaming.StreamingOps.windowedCms(
-            s.readStream.schema(schema).parquet(s"$tmp/in"))
+          StreamingOps.windowedCms(
+            s.readStream.schema(StreamingOps.timedDocSchema).parquet(s"$tmp/in"))
         },
       // same tokenization + md5 bucket math as q_cms_sketch, grouped per
       // tumbling-hour window of the fixture's event times
@@ -175,10 +174,9 @@ object Streaming extends QueryFamily("streaming") {
           import s.implicits._
           s.createDataset(streamDocs).toDF().coalesce(1).write.parquet(s"$tmp/docs")
           s.createDataset(streamLabels).toDF().coalesce(1).write.parquet(s"$tmp/labels")
-          val docSchema = org.apache.spark.sql.Encoders.product[TimedDoc].schema
           val labelSchema = org.apache.spark.sql.Encoders.product[DocLabel].schema
-          graft.streaming.StreamingOps.joinLabels(
-            s.readStream.schema(docSchema).parquet(s"$tmp/docs"),
+          StreamingOps.joinLabels(
+            s.readStream.schema(StreamingOps.timedDocSchema).parquet(s"$tmp/docs"),
             s.readStream.schema(labelSchema).parquet(s"$tmp/labels"))
         },
       // Oracle for x_stream_join, DERIVED from the two fixture Seqs (not
@@ -203,9 +201,9 @@ object Streaming extends QueryFamily("streaming") {
         // survives restart AND the first-seen-wins contract (wave 2 carries
         // a smaller-id duplicate that must stay suppressed)
         s.createDataset(streamDocs).toDF().coalesce(1).write.mode("append").parquet(s"$tmp/in")
-        graft.streaming.StreamingOps.runDedupStream(s, s"$tmp/in", s"$tmp/out")
+        StreamingOps.runDedupStream(s, s"$tmp/in", s"$tmp/out")
         s.createDataset(streamDedupWave2).toDF().coalesce(1).write.mode("append").parquet(s"$tmp/in")
-        graft.streaming.StreamingOps.runDedupStream(s, s"$tmp/in", s"$tmp/out")
+        StreamingOps.runDedupStream(s, s"$tmp/in", s"$tmp/out")
         s.read.parquet(s"$tmp/out/deduped").select(col("doc_id"), col("text"))
       },
       // Order-aware oracle: first-seen-wins across waves — within a wave the
@@ -225,9 +223,9 @@ object Streaming extends QueryFamily("streaming") {
     query("x_stream_neardedup", build = (s, _) => fixtureStream(s, "graft-sneardedup") { tmp =>
         import s.implicits._
         s.createDataset(nearStreamWave1).toDF().coalesce(1).write.mode("append").parquet(s"$tmp/in")
-        graft.streaming.StreamingOps.runDedupStream(s, s"$tmp/in", s"$tmp/out", near = true)
+        StreamingOps.runDedupStream(s, s"$tmp/in", s"$tmp/out", near = true)
         s.createDataset(nearStreamWave2).toDF().coalesce(1).write.mode("append").parquet(s"$tmp/in")
-        graft.streaming.StreamingOps.runDedupStream(s, s"$tmp/in", s"$tmp/out", near = true)
+        StreamingOps.runDedupStream(s, s"$tmp/in", s"$tmp/out", near = true)
         s.read.parquet(s"$tmp/out/deduped").select(col("doc_id"), col("text"))
       },
       oracle =
@@ -249,9 +247,9 @@ object Streaming extends QueryFamily("streaming") {
           TimedDoc(13, "clean only", "books", ts(0, 2)))
         val wave2 = Seq(TimedDoc(14, "also keep\nFOOTER LINE", "cc", ts(0, 3)))
         s.createDataset(wave1).toDF().coalesce(1).write.mode("append").parquet(s"$tmp/in")
-        graft.streaming.StreamingOps.runScrubBoilerplateStream(s, s"$tmp/in", hashes, s"$tmp/out")
+        StreamingOps.runScrubBoilerplateStream(s, s"$tmp/in", hashes, s"$tmp/out")
         s.createDataset(wave2).toDF().coalesce(1).write.mode("append").parquet(s"$tmp/in")
-        graft.streaming.StreamingOps.runScrubBoilerplateStream(s, s"$tmp/in", hashes, s"$tmp/out")
+        StreamingOps.runScrubBoilerplateStream(s, s"$tmp/in", hashes, s"$tmp/out")
         s.read.parquet(s"$tmp/out/scrubbed").select(col("doc_id"), col("clean_text"))
       },
       oracle =
@@ -270,9 +268,9 @@ object Streaming extends QueryFamily("streaming") {
           TimedDoc(23, "plain", "books", ts(0, 2)))
         val wave2 = Seq(TimedDoc(24, "don\u00e2\u20ac\u2122t", "cc", ts(0, 3)))
         s.createDataset(wave1).toDF().coalesce(1).write.mode("append").parquet(s"$tmp/in")
-        graft.streaming.StreamingOps.runRepairTextStream(s, s"$tmp/in", s"$tmp/out")
+        StreamingOps.runRepairTextStream(s, s"$tmp/in", s"$tmp/out")
         s.createDataset(wave2).toDF().coalesce(1).write.mode("append").parquet(s"$tmp/in")
-        graft.streaming.StreamingOps.runRepairTextStream(s, s"$tmp/in", s"$tmp/out")
+        StreamingOps.runRepairTextStream(s, s"$tmp/in", s"$tmp/out")
         s.read.parquet(s"$tmp/out/repaired").select(col("doc_id"), col("clean_text"))
       },
       // hand-derived repaired+composed forms (chr codes = true code points)
@@ -289,9 +287,9 @@ object Streaming extends QueryFamily("streaming") {
           case (t, i) => (9000L + i, t)
         }).toDF("doc_id", "text")
         s.createDataset(decontamWave1).toDF().coalesce(1).write.mode("append").parquet(s"$tmp/in")
-        graft.streaming.StreamingOps.runDecontaminateStream(s, s"$tmp/in", evalDocs, s"$tmp/out")
+        StreamingOps.runDecontaminateStream(s, s"$tmp/in", evalDocs, s"$tmp/out")
         s.createDataset(decontamWave2).toDF().coalesce(1).write.mode("append").parquet(s"$tmp/in")
-        graft.streaming.StreamingOps.runDecontaminateStream(s, s"$tmp/in", evalDocs, s"$tmp/out")
+        StreamingOps.runDecontaminateStream(s, s"$tmp/in", evalDocs, s"$tmp/out")
         s.read.parquet(s"$tmp/out/clean").select(col("doc_id"), col("text"))
       },
       oracle = {

@@ -1,9 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import graft.expressions.NativeFunctions
+import graft.operators.TrainingOps
 
 /** Streaming operators beyond the micro-batch extraction front end:
   * watermarked event-time windowing and custom keyed state — the two
@@ -13,6 +14,10 @@ import graft.expressions.NativeFunctions
 object StreamingOps {
 
   case class TimedDoc(doc_id: Long, text: String, source: String, event_time: java.sql.Timestamp)
+
+  /** The schema of a TimedDoc parquet directory, the file source of the
+    * stream runners here and of the streaming queries. */
+  private[graft] lazy val timedDocSchema = Encoders.product[TimedDoc].schema
 
   /** Watermarked tumbling-window ingest metrics: docs and bytes per
     * (event-time window, source). The watermark bounds state: windows
@@ -38,9 +43,7 @@ object StreamingOps {
     * no-op there), which is what the batch ≡ stream spec pins. */
   def windowedCms(docs: DataFrame, watermark: String = "10 minutes",
                   win: String = "1 hour", depth: Int = 4, width: Int = 256): DataFrame =
-    docs.withWatermark("event_time", watermark)
-      .select(col("event_time"), explode(split(lower(col("text")), "\\s+")).as("w"))
-      .where(col("w") =!= "")
+    TrainingOps.wordRows(docs.withWatermark("event_time", watermark), "w", col("event_time"))
       .select(col("event_time"), col("w"),
         explode(sequence(lit(0), lit(depth - 1))).as("d"))
       .select(col("event_time"), col("d"),
@@ -120,7 +123,7 @@ object StreamingOps {
     * key's newest event-time); earlier revisions stored a Boolean.
     * flatMapGroupsWithState does not migrate state schemas, so a
     * checkpoint written by the Boolean revision cannot be resumed by this
-    * one — upgrading requires a fresh `checkpointLocation` (re-seeding
+    * one — upgrading requires a fresh checkpoint directory (re-seeding
     * dedup state from the committed output if first-seen history must be
     * preserved). */
   def dedupByTextStream(docs: Dataset[TimedDoc],
@@ -146,7 +149,7 @@ object StreamingOps {
   def dedupNearStream(docs: Dataset[TimedDoc],
                       retention: Option[String] = None): Dataset[TimedDoc] =
     dedupStreamByKey(docs, retention) { d =>
-      val sig = graft.operators.TrainingOps.minhashSig(d.text)
+      val sig = TrainingOps.minhashSig(d.text)
       var h = 0xcbf29ce484222325L
       var i = 0
       while (i < sig.length) { h = (h ^ sig(i)) * 0x100000001b3L; i += 1 }
@@ -207,23 +210,32 @@ object StreamingOps {
   /** Run the streaming dedup over a file-source directory with an
     * AvailableNow trigger; returns after the sink is complete.
     * `near = true` routes through [[dedupNearStream]] (minhash-signature
-    * keys) instead of exact text keys — use a fresh checkpointLocation
+    * keys) instead of exact text keys — use a fresh checkpoint directory
     * when switching modes (different key space). */
   def runDedupStream(spark: SparkSession, inDir: String, outDir: String,
                      retention: Option[String] = None, near: Boolean = false): Unit = {
     import spark.implicits._
-    val schema = org.apache.spark.sql.Encoders.product[TimedDoc].schema
-    val in = spark.readStream.schema(schema).parquet(inDir).as[TimedDoc]
-    val deduped = if (near) dedupNearStream(in, retention) else dedupByTextStream(in, retention)
-    val q: StreamingQuery = deduped.writeStream
+    runFileStream(spark, inDir, outDir, "deduped") { df =>
+      val in = df.as[TimedDoc]
+      if (near) dedupNearStream(in, retention) else dedupByTextStream(in, retention)
+    }
+  }
+
+  /** The file-stream runner of every `run*Stream`: `transform` over the
+    * TimedDoc parquet stream of `inDir`, one AvailableNow run appending
+    * parquet to `outDir/sink`, checkpointed in `outDir/_checkpoint` (a
+    * restart resumes from the last committed batch); returns when the
+    * sink is complete. */
+  private def runFileStream(spark: SparkSession, inDir: String, outDir: String, sink: String)
+                           (transform: DataFrame => Dataset[_]): Unit =
+    transform(spark.readStream.schema(timedDocSchema).parquet(inDir)).writeStream
       .option("checkpointLocation", s"$outDir/_checkpoint")
       .outputMode(OutputMode.Append)
       .trigger(Trigger.AvailableNow())
       .format("parquet")
-      .option("path", s"$outDir/deduped")
+      .option("path", s"$outDir/$sink")
       .start()
-    q.awaitTermination()
-  }
+      .awaitTermination()
 
   /** Ingest-time decontamination predicate (keep = true): a doc passes
     * iff NONE of its word `n`-grams appears in the eval set. Built as a
@@ -244,11 +256,9 @@ object StreamingOps {
     * batch≡stream agreement on the driver fixtures). */
   def decontaminateFilter(evalDocs: DataFrame, n: Int = 13,
                           bitsPerItem: Int = 12): org.apache.spark.sql.Column = {
-    import graft.operators.TrainingOps
     val spark = evalDocs.sparkSession
     import spark.implicits._
-    val evalGrams = evalDocs
-      .select(explode(array_distinct(TrainingOps.shingles(col("text"), n))).as("g")).distinct()
+    val evalGrams = TrainingOps.gramRows(evalDocs, n).distinct()
     val bloom = TrainingOps.buildBloom(evalGrams, "g", bitsPerItem)
     val b64 = java.util.Base64.getEncoder.encodeToString(bloom)
     val hashes = evalGrams.select(xxhash64(col("g")).as("h")).as[Long].collect()
@@ -276,20 +286,9 @@ object StreamingOps {
     * TimedDoc parquet with an AvailableNow trigger; scrubbed docs land in
     * `outDir/scrubbed`, checkpointed. */
   def runScrubBoilerplateStream(spark: SparkSession, inDir: String,
-                                lineHashes: Array[Long], outDir: String): Unit = {
-    val schema = org.apache.spark.sql.Encoders.product[TimedDoc].schema
-    val in = spark.readStream.schema(schema).parquet(inDir)
-    val q: StreamingQuery = in
-      .withColumn("clean_text", scrubBoilerplateLines(lineHashes))
-      .writeStream
-      .option("checkpointLocation", s"$outDir/_checkpoint")
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .format("parquet")
-      .option("path", s"$outDir/scrubbed")
-      .start()
-    q.awaitTermination()
-  }
+                                lineHashes: Array[Long], outDir: String): Unit =
+    runFileStream(spark, inDir, outDir, "scrubbed")(
+      _.withColumn("clean_text", scrubBoilerplateLines(lineHashes)))
 
   /** Streaming text repair at ingest: mojibake reversal + NFC canonical
     * composition as STATELESS native-codegen column rewrites
@@ -300,18 +299,8 @@ object StreamingOps {
     * committed batch. */
   def runRepairTextStream(spark: SparkSession, inDir: String, outDir: String): Unit = {
     NativeFunctions.register(spark)
-    val schema = org.apache.spark.sql.Encoders.product[TimedDoc].schema
-    val in = spark.readStream.schema(schema).parquet(inDir)
-    val q: StreamingQuery = in
-      .withColumn("clean_text", expr("graft_nfc(graft_fix_mojibake(text))"))
-      .writeStream
-      .option("checkpointLocation", s"$outDir/_checkpoint")
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .format("parquet")
-      .option("path", s"$outDir/repaired")
-      .start()
-    q.awaitTermination()
+    runFileStream(spark, inDir, outDir, "repaired")(
+      _.withColumn("clean_text", expr("graft_nfc(graft_fix_mojibake(text))")))
   }
 
   /** Run streaming decontamination over a file-source directory of
@@ -319,16 +308,6 @@ object StreamingOps {
     * dropped at ingest, clean docs land in `outDir/clean`, checkpointed
     * (a restart resumes from the last committed batch). */
   def runDecontaminateStream(spark: SparkSession, inDir: String, evalDocs: DataFrame,
-                             outDir: String, n: Int = 13): Unit = {
-    val schema = org.apache.spark.sql.Encoders.product[TimedDoc].schema
-    val in = spark.readStream.schema(schema).parquet(inDir)
-    val q: StreamingQuery = in.where(decontaminateFilter(evalDocs, n)).writeStream
-      .option("checkpointLocation", s"$outDir/_checkpoint")
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .format("parquet")
-      .option("path", s"$outDir/clean")
-      .start()
-    q.awaitTermination()
-  }
+                             outDir: String, n: Int = 13): Unit =
+    runFileStream(spark, inDir, outDir, "clean")(_.where(decontaminateFilter(evalDocs, n)))
 }
